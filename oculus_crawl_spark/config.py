@@ -45,9 +45,6 @@ class IndexConfig:
     # top-k distributable. 2^20 docs/range => 10^12 docs = ~1M ranges.
     range_bits: int = 20
 
-    # Shuffle partitions for the build (AQE coalesces down at runtime).
-    shuffle_partitions: int = 32
-
     # Number of driver-side merge waves for the checkpoint-resumable
     # segment merge (E14): each wave commits its term buckets + manifest
     # atomically, so a crash loses at most one wave.

@@ -37,20 +37,22 @@ def tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
-def bmax32(x: float) -> np.float32:
+def bmax32(x: float | np.ndarray) -> np.float32 | np.ndarray:
     """Admissible float32 block-max: the to-nearest cast can land one
     ulp BELOW the true float64 max, and WAND pruning compares idf*bmax
     against an EXACT float64 theta — a bound short by ~score*6e-8 (far
     above the query side's 1e-9 slack) prunes blocks holding docs that
     TIE the k-th score, silently dropping the pinned tie-break winner.
     Round the cast UP instead, so stored bounds are always >= the true
-    max. ONE definition for the build kernel, the merge kernel, and the
-    kernel test harness — a harness that stores float64 (or a plain
-    cast) is not testing the production bound representation."""
-    f = np.float32(x)
-    if f < x:
-        f = np.nextafter(f, np.float32(np.inf))
-    return f
+    max. ONE definition for the shared re-block routine (build and
+    merge) and the kernel test harness — a harness that stores float64
+    (or a plain cast) is not testing the production bound
+    representation. Elementwise over arrays; a scalar in gives a
+    float32 scalar out."""
+    x = np.asarray(x, dtype=np.float64)
+    f = x.astype(np.float32)
+    f = np.where(f < x, np.nextafter(f, np.float32(np.inf)), f)
+    return f[()]
 
 
 # --- Spark Column expression (JVM-side, codegen'd) ---------------------------

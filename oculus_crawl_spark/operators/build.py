@@ -560,18 +560,63 @@ _BLOCKS_SCHEMA = (
 )
 
 
-def _group_slices(*keys: np.ndarray):
-    """Boundaries of equal-key runs over pre-sorted key arrays."""
+def _run_starts(*keys: np.ndarray) -> np.ndarray:
+    """Row offsets where an equal-key run begins, over pre-sorted keys."""
     n = len(keys[0])
-    if n == 0:
-        return
     change = np.zeros(n, dtype=bool)
-    change[0] = True
+    change[:1] = True
     for k in keys:
         change[1:] |= k[1:] != k[:-1]
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], n)
-    yield from zip(starts, ends)
+    return np.flatnonzero(change)
+
+
+def _group_slices(*keys: np.ndarray):
+    """Boundaries of equal-key runs over pre-sorted key arrays."""
+    starts = _run_starts(*keys)
+    yield from zip(starts, np.append(starts[1:], len(keys[0])))
+
+
+def reblock(
+    gid: np.ndarray,
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    avgdl: float,
+    bs: int,
+) -> dict:
+    """Cut posting groups into ``bs``-doc blocks with block-max bounds —
+    the one re-block routine of build phase 2 and the merge kernel.
+
+    Input: the postings of many groups back to back, sorted by (gid,
+    doc_id), at least one posting. Output: one entry per block, in
+    (group, block_id) order — ``group`` (the block's gid, for the
+    caller's keys), ``block_id`` (0-based within its group), first/last
+    doc, n_docs, sum_tf, the admissible float32 ``block_max_tf_norm``
+    (bm25.bmax32) and the three encoded payloads. Bounds come from
+    reduceat over block starts and payloads from ONE batched encode per
+    column (a per-block encode call costs ~0.25 ms of fixed overhead)."""
+    n = len(docs)
+    g_start = _run_starts(gid)
+    g_end = np.append(g_start[1:], n)
+    n_blk = -(-(g_end - g_start) // bs)
+    g_of_blk = np.repeat(np.arange(len(g_start)), n_blk)
+    block_id = np.arange(len(g_of_blk)) - np.repeat(np.cumsum(n_blk) - n_blk, n_blk)
+    b_start = g_start[g_of_blk] + block_id * bs
+    b_end = np.minimum(b_start + bs, g_end[g_of_blk])
+    cuts = b_start[1:]
+    tf_norms = bm25.tf_norm(tfs, dls, avgdl)
+    return {
+        "group": gid[b_start],
+        "block_id": block_id.astype(np.int32),
+        "first_doc": docs[b_start].astype(np.int64),
+        "last_doc": docs[b_end - 1].astype(np.int64),
+        "n_docs": (b_end - b_start).astype(np.int32),
+        "sum_tf": np.add.reduceat(tfs, b_start).astype(np.int64),
+        "block_max_tf_norm": bm25.bmax32(np.maximum.reduceat(tf_norms, b_start)),
+        "doc_bytes": encode_doc_gaps_many(np.split(docs.astype(np.uint64), cuts)),
+        "tf_bytes": pfor_encode_many(np.split(tfs, cuts)),
+        "dl_bytes": pfor_encode_many(np.split(dls, cuts)),
+    }
 
 
 def _encode_runs_partition(batches) -> "pd.DataFrame":
@@ -625,75 +670,33 @@ def _merge_runs_partition_factory(avgdl: float, epoch: int, cfg: IndexConfig):
     bs = cfg.block_size
 
     def merge_partition(batches):
-        parts = [p for p in batches]
+        parts = [p for p in batches if len(p)]
         if not parts:
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
         tids = pdf["term_id"].to_numpy()
         rbs = pdf["range_bucket"].to_numpy()
-        out = {k: [] for k in (
-            "term_id", "range_bucket", "block_id", "first_doc",
-            "last_doc", "n_docs", "sum_tf", "block_max_tf_norm",
-            "epoch",
-        )}
         # ALL runs of the partition are decoded in ONE batched pass
         # (per-group decode calls were fixed cost on group-heavy
-        # partitions); a group's values are then the contiguous slice
-        # [row_offs[s], row_offs[e]) since rows are group-sorted.
-        # Output block payloads are likewise collected and encoded in
-        # ONE batched pass at the end (~0.25 ms per per-block call).
-        all_docs, run_lens = decode_doc_ids_many(
+        # partitions); rows are group-sorted, so each group's postings
+        # are contiguous.
+        docs, run_lens = decode_doc_ids_many(
             pdf["first_doc"].to_numpy(dtype=np.uint64),
             list(pdf["doc_bytes"]),
             pdf["n_docs"].to_numpy(dtype=np.int64),
         )
-        all_tfs, _ = pfor_decode_many(list(pdf["tf_bytes"]))
-        all_dls, _ = pfor_decode_many(list(pdf["dl_bytes"]))
-        row_offs = np.concatenate(([0], np.cumsum(run_lens)))
-        d_slices: list[np.ndarray] = []
-        t_slices: list[np.ndarray] = []
-        l_slices: list[np.ndarray] = []
-        for s, e in _group_slices(tids, rbs):
-            v0, v1 = int(row_offs[s]), int(row_offs[e])
-            docs = all_docs[v0:v1]
-            tfs = all_tfs[v0:v1]
-            dls = all_dls[v0:v1]
-            order = np.argsort(docs, kind="stable")  # docs unique across salts
-            docs, tfs, dls = docs[order], tfs[order], dls[order]
-            tf_norms = bm25.tf_norm(tfs, dls, avgdl)
-            for bid, start in enumerate(range(0, len(docs), bs)):
-                d = docs[start : start + bs]
-                t = tfs[start : start + bs]
-                out["term_id"].append(tids[s])
-                out["range_bucket"].append(rbs[s])
-                out["block_id"].append(bid)
-                out["first_doc"].append(np.int64(d[0]))
-                out["last_doc"].append(np.int64(d[-1]))
-                out["n_docs"].append(len(d))
-                out["sum_tf"].append(int(t.sum()))
-                # Upward-rounded cast (bm25.bmax32): an inadmissible
-                # to-nearest float32 makes WAND prune blocks whose docs
-                # tie the k-th score.
-                out["block_max_tf_norm"].append(
-                    bm25.bmax32(tf_norms[start : start + bs].max())
-                )
-                d_slices.append(d)
-                t_slices.append(t)
-                l_slices.append(dls[start : start + bs])
-                out["epoch"].append(epoch)
-        out["doc_bytes"] = encode_doc_gaps_many(d_slices)
-        out["tf_bytes"] = pfor_encode_many(t_slices)
-        out["dl_bytes"] = pfor_encode_many(l_slices)
+        tfs, _ = pfor_decode_many(list(pdf["tf_bytes"]))
+        dls, _ = pfor_decode_many(list(pdf["dl_bytes"]))
+        starts = _run_starts(tids, rbs)
+        gid = np.repeat(np.arange(len(starts)), np.add.reduceat(run_lens, starts))
+        order = np.lexsort((docs, gid))  # docs unique within a group across salts
+        blocks = reblock(gid[order], docs[order], tfs[order], dls[order], avgdl, bs)
+        rows = starts[blocks.pop("group")]
         # column order must match _BLOCKS_SCHEMA (position-matched)
-        res = pd.DataFrame(out)[[
-            "term_id", "range_bucket", "block_id", "first_doc",
-            "last_doc", "n_docs", "sum_tf", "block_max_tf_norm",
-            "doc_bytes", "tf_bytes", "dl_bytes", "epoch",
-        ]]
-        res["block_id"] = res["block_id"].astype(np.int32)
-        res["n_docs"] = res["n_docs"].astype(np.int32)
-        res["block_max_tf_norm"] = res["block_max_tf_norm"].astype(np.float32)
-        yield res
+        yield pd.DataFrame({
+            "term_id": tids[rows], "range_bucket": rbs[rows], **blocks,
+            "epoch": np.int64(epoch),
+        })
 
     return merge_partition
 
@@ -907,19 +910,25 @@ def build_index(
     # rewrites corpus_stats LAST — if it raced ahead here, a concurrent
     # search() could cache a session built over a half-written
     # dictionary under the final signature and serve it indefinitely.
+    # Spark job groups, descriptions and tags are thread-local:
+    # inheritable_thread_target copies the caller's into the pool
+    # threads, so the caller's job-group attribution covers these writes.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    write = inheritable_thread_target(spark)(write_table)
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(write_table, dictionary, paths.dictionary),
-            pool.submit(write_table, doclen, paths.doclen),
+            pool.submit(write, dictionary, paths.dictionary),
+            pool.submit(write, doclen, paths.doclen),
             # overwrite, not append: a rebuild into a reused root fully
             # replaces segments/dictionary/doclen (write_table pins
             # static overwrite), so appending here would accumulate
             # duplicate (epoch, 'build', partition_id) rows that every
             # lineage consumer double-counts — the same stale-manifest
             # class the merge path purges explicitly.
-            pool.submit(write_table, lineage, paths.lineage),
+            pool.submit(write, lineage, paths.lineage),
         ]
         for f in futs:
             f.result()

@@ -11,7 +11,9 @@ Four dedup families over the ``documents`` corpus, each Spark-first:
                        MinHash path is graded against.
 * MinHash + LSH      — 126 minhashes, 42 bands x 3 rows; band-bucket
                        groupBy emits candidate pairs; candidates are
-                       exact-verified (re-shingled in an Arrow UDF), so
+                       exact-verified (each doc's shingle-hash array is
+                       shipped to a mapInPandas kernel, not
+                       re-shingled), so
                        output == exhaustive pairs whenever LSH recall is
                        1. Band geometry is matched to the GRADED 0.6
                        threshold (round-1 advice): miss probability for
@@ -761,6 +763,6 @@ QUERIES = {
         NGRAM_JACCARD_ORACLE_SQL + " ORDER BY a_id, b_id",
     ),
     # SimHash hashing is not SQL-expressible -> rows-only driver check;
-    # correctness is pytest-verified (tests/test_dedup.py).
+    # correctness is pytest-verified (tests/test_dataset_ops.py).
     "dedup_simhash": (q_dedup_simhash, None),
 }

@@ -12,7 +12,9 @@ column — and processed in ``cfg.merge_waves`` driver-side waves. Each
 wave is one Spark job:
 
   union(input segments for the wave's buckets)
-    -> groupBy(term, range_bucket).applyInPandas(merge kernel)
+    -> repartition(term, range_bucket)
+       .sortWithinPartitions(term, range_bucket)
+       .mapInPandas(merge kernel)
     -> dynamic-partition-overwrite of exactly those term_buckets
     -> append one manifest row per bucket to lineage_metrics
        (stage='merge', status='done')
@@ -26,6 +28,12 @@ the committed merged segments) is a pure overwrite, safe to repeat.
 
 Merge semantics
 ---------------
+The kernel has the build's phase-2 shape: one Arrow stream per sorted
+shuffle partition (many (term, range_bucket) groups), every block of
+the partition decoded in one batched pass, and the blocks written by
+the same ``build.reblock`` routine as the build — so a merged
+generation and a full build of the same corpus store the same blocks
+(block-max bounds agree to the last bits of the two avgdl sums).
 Posting lists are re-blocked per (term, range_bucket) with duplicate
 doc_ids resolved LATEST-EPOCH-WINS (a re-crawled url keeps its doc_id
 via the docmap, so the new epoch's postings shadow the old). Block-max
@@ -47,9 +55,11 @@ by range_bucket so a worker reads only its ranges' delete files.
 Scale notes: the kernel's input rows are already-compressed blocks
 (~1-2 bytes/posting over the wire); a group is one term within one
 2^range_bits doc range, so group size is bounded regardless of how hot
-the term is; waves bound the blast radius of a failure and give the
-manifest its checkpoint granularity. At 10^12 docs: thousands of term
-buckets, waves sized so one wave ~ one cluster-full of tasks.
+the term is, and a worker buffers one shuffle partition (sized by
+spark.sql.shuffle.partitions like any sort-based stage); waves bound
+the blast radius of a failure and give the manifest its checkpoint
+granularity. At 10^12 docs: thousands of term buckets, waves sized so
+one wave ~ one cluster-full of tasks.
 
 Catalog note: unlike the build (sources/tables.py shim), the merge's
 writes are deliberately RAW parquet in this sandbox — its checkpoint
@@ -82,8 +92,14 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..config import DEFAULT, IndexConfig
-from ..functions import bm25
-from .build import IndexPaths, derive_dictionary, index_geometry
+from ..functions.codec import decode_doc_ids_many, pfor_decode_many
+from .build import (
+    IndexPaths,
+    _run_starts,
+    derive_dictionary,
+    index_geometry,
+    reblock,
+)
 
 
 class MergeInterrupted(RuntimeError):
@@ -152,26 +168,23 @@ def _merge_blocks_factory(
     avgdl: float, epoch_out: int, cfg: IndexConfig,
     tombstone_path: str | None = None, tombstone_fp: tuple = (),
 ):
-    """Kernel: all input blocks of one (term, range_bucket) -> merged,
-    re-blocked, re-bounded segment rows. Tombstoned (superseded-epoch)
-    docs are dropped at decode; latest-epoch-wins dedup then handles
-    docs present in several epochs' postings of the SAME term."""
+    """Kernel: a whole shuffle partition of input blocks, sorted by
+    (term, range_bucket) -> merged, re-blocked, re-bounded segment rows.
+    Tombstoned (superseded-epoch) docs are dropped at decode;
+    latest-epoch-wins dedup then handles docs present in several
+    epochs' postings of the SAME term."""
     bs = cfg.block_size
 
-    def merge_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
-        rb_key = int(pdf["range_bucket"].iloc[0])
-        tomb = (
-            _load_tombstones(tombstone_path, tombstone_fp, rb_key)
-            if tombstone_path
-            else {}
-        )
-        # Batched decode of ALL input blocks in one numpy pass (a hot
-        # term's group spans thousands of blocks at corpus scale; the
-        # per-block call overhead was the kernel bound — same fix as
-        # the query kernel). Tombstone filtering is applied per input
-        # epoch on the concatenated arrays.
-        from ..functions.codec import decode_doc_ids_many, pfor_decode_many
-
+    def merge_partition(batches):
+        parts = [p for p in batches if len(p)]
+        if not parts:
+            return
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+        terms = pdf["term"].to_numpy()
+        rbs = pdf["range_bucket"].to_numpy()
+        # ONE batched decode of every input block of the partition (a hot
+        # term spans thousands of blocks at corpus scale; per-block calls
+        # were the kernel bound — same fix as the query kernel).
         docs, dlens = decode_doc_ids_many(
             pdf["first_doc"].to_numpy(dtype=np.uint64),
             list(pdf["doc_bytes"]),
@@ -180,81 +193,45 @@ def _merge_blocks_factory(
         docs = docs.astype(np.int64)
         tfs, _ = pfor_decode_many(list(pdf["tf_bytes"]))
         dls, _ = pfor_decode_many(list(pdf["dl_bytes"]))
+        starts = _run_starts(terms, rbs)
+        gid = np.repeat(np.arange(len(starts)), np.add.reduceat(dlens, starts))
         eps = np.repeat(pdf["epoch"].to_numpy(dtype=np.int64), dlens)
-        if tomb:
+        if tombstone_path:
+            # A doc's tombstone lives in its own range_bucket's delete
+            # file, so one membership test per epoch against the union of
+            # the partition's ranges is exact.
+            dead: dict[int, list[np.ndarray]] = {}
+            for rb in np.unique(rbs).tolist():
+                for ep, d in _load_tombstones(tombstone_path, tombstone_fp, rb).items():
+                    dead.setdefault(ep, []).append(d)
             keep = np.ones(len(docs), dtype=bool)
-            for ep, dead in tomb.items():
-                if not len(dead):
-                    continue
+            for ep, chunks in dead.items():
                 sel = eps == ep
-                d = docs[sel]
-                pos = np.searchsorted(dead, d)
-                pos = np.minimum(pos, len(dead) - 1)
-                keep[sel] = dead[pos] != d
-            docs, tfs, dls, eps = docs[keep], tfs[keep], dls[keep], eps[keep]
-        if len(docs) == 0:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in schemas.SEGMENTS.fields}
-            ).iloc[:0]
-
-        # Sort by (doc_id, epoch); keep the LAST (highest-epoch) posting
-        # of each doc_id.
-        order = np.lexsort((eps, docs))
-        docs, tfs, dls = docs[order], tfs[order], dls[order]
-        keep = np.append(docs[1:] != docs[:-1], True)
-        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-
-        term = pdf["term"].iloc[0]
-        rb = int(pdf["range_bucket"].iloc[0])
-        # STORED bucket, never recomputed: recomputing with the merge
-        # process' cfg would silently route output into the wrong
-        # partitions if it disagrees with the build-time geometry.
-        tb = int(pdf["term_bucket"].iloc[0])
-        tf_norms = bm25.tf_norm(tfs, dls, avgdl)
-
-        from ..functions.codec import encode_doc_gaps_many, pfor_encode_many
-
-        rows = []
-        d_slices, t_slices, l_slices = [], [], []
-        for bid, start in enumerate(range(0, len(docs), bs)):
-            d = docs[start : start + bs]
-            t = tfs[start : start + bs]
-            # Upward-rounded cast (bm25.bmax32), same admissibility
-            # contract as the build kernel: an inadmissible to-nearest
-            # float32 makes WAND prune a block whose doc ties the k-th
-            # score.
-            bmax32 = bm25.bmax32(tf_norms[start : start + bs].max())
-            rows.append(
-                {
-                    "term": term,
-                    "term_bucket": tb,
-                    "range_bucket": rb,
-                    "block_id": bid,
-                    "first_doc": np.int64(d[0]),
-                    "last_doc": np.int64(d[-1]),
-                    "n_docs": np.int32(len(d)),
-                    "sum_tf": np.int64(t.sum()),
-                    "block_max_tf_norm": bmax32,
-                    "epoch": np.int64(epoch_out),
-                }
+                keep[sel] = ~np.isin(docs[sel], np.concatenate(chunks))
+            gid, docs, tfs, dls, eps = (
+                gid[keep], docs[keep], tfs[keep], dls[keep], eps[keep]
             )
-            d_slices.append(d.astype(np.uint64))
-            t_slices.append(t)
-            l_slices.append(dls[start : start + bs])
-        # batched block encode (same per-block fixed-cost bound as the
-        # build/query kernels)
-        for row, db, tb_, lb in zip(
-            rows,
-            encode_doc_gaps_many(d_slices),
-            pfor_encode_many(t_slices),
-            pfor_encode_many(l_slices),
-        ):
-            row["doc_bytes"] = db
-            row["tf_bytes"] = tb_
-            row["dl_bytes"] = lb
-        return pd.DataFrame(rows)[[f.name for f in schemas.SEGMENTS.fields]]
+        if not len(docs):
+            return
+        # Sort by (group, doc_id, epoch); keep the LAST (highest-epoch)
+        # posting of each (group, doc_id).
+        order = np.lexsort((eps, docs, gid))
+        gid, docs, tfs, dls = gid[order], docs[order], tfs[order], dls[order]
+        last = np.append((gid[1:] != gid[:-1]) | (docs[1:] != docs[:-1]), True)
+        blocks = reblock(gid[last], docs[last], tfs[last], dls[last], avgdl, bs)
+        rows = starts[blocks.pop("group")]
+        # term_bucket is the STORED bucket, never recomputed: recomputing
+        # with the merge process' cfg would silently route output into
+        # the wrong partitions if it disagrees with the build geometry.
+        yield pd.DataFrame({
+            "term": terms[rows],
+            "term_bucket": pdf["term_bucket"].to_numpy()[rows],
+            "range_bucket": rbs[rows],
+            **blocks,
+            "epoch": np.int64(epoch_out),
+        })
 
-    return merge_blocks
+    return merge_partition
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
@@ -543,8 +520,10 @@ def merge_indexes(
         union = seg_inputs[0].filter(F.col("term_bucket").isin(wave))
         for df in seg_inputs[1:]:
             union = union.unionByName(df.filter(F.col("term_bucket").isin(wave)))
-        merged = union.groupBy("term", "range_bucket").applyInPandas(
-            kernel, schemas.SEGMENTS
+        merged = (
+            union.repartition("term", "range_bucket")
+            .sortWithinPartitions("term", "range_bucket")
+            .mapInPandas(kernel, schemas.SEGMENTS)
         )
         # Dynamic partition overwrite: ONLY this wave's term_buckets are
         # replaced (idempotent on rerun after a crash mid-wave).

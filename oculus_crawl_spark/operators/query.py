@@ -4,10 +4,10 @@
   Q2 dictionary lookup -> (term, df, idf, term_bucket)      [tiny, driver]
   Q3 partition pruning: segments scan touches ONLY the term_buckets of
      query terms (literal IN-list => parquet/Iceberg partition pruning)
-     + broadcast join against the query-terms DataFrame
-  Q4 block-max WAND: per (query_id, range_bucket) group, an exact top-k
+     and only the rows of query terms (term IN-list)
+  Q4 block-max WAND: per (query_id, range_bucket), an exact top-k
      with per-block max-score skipping over lazily-decompressed posting
-     blocks, vectorized in NumPy inside applyInPandas
+     blocks, vectorized in NumPy inside mapInPandas
   Q5 Okapi BM25 k1=1.2 b=0.75 (functions/bm25 — one frozen formula)
   Q6 global top-k merge of the per-range top-k rows (tiny)
   Q7 rank assignment, pinned tie-break (score DESC, doc_id ASC)
@@ -19,22 +19,23 @@ seeing only its range's blocks. Per-range top-k lists (<= k rows each)
 are then globally merged — a classic document-partitioned search tier
 expressed as two DataFrame ops.
 
-Execution tiers (both proven row-identical in tests):
+One kernel shape: every session holds ONE relation, the segments
+repartitioned by range_bucket, and every query batch runs
+filter(term_bucket IN buckets AND term IN terms) -> mapInPandas(WAND)
+-> gather over it. The per-term (query_id, idf) plan rides in the
+kernel closure, so no join ever touches the blocks; hash partitioning
+puts every block of one range_bucket in one partition, so each
+(query, range) WAND in a partition is exact.
 
-* FAST path (default when the session is resident): segments are kept
-  persisted PRE-PARTITIONED BY range_bucket, and the per-term
-  (query_id, idf) plan rides in the kernel closure — so a query batch
-  is ONE narrow stage: cached-scan filter(term IN terms) ->
-  mapInPandas(WAND) -> gather. No per-query join, no broadcast, no
-  shuffle, no AQE re-plan. This is how a serving tier works: the shard
-  layout is fixed at load time, queries are routed to it. Measured at
-  sandbox scale the eliminated exchange+broadcast was ~5x the kernel
-  cost per query.
-* SHUFFLE path (huge-vocab / uncached sessions, and gather='spark'
-  merge): broadcast join of the query-terms frame against a
-  partition-pruned parquet scan, then groupBy(query_id, range_bucket)
-  applyInPandas — the general form that never requires the dictionary
-  or segment layout to be resident.
+* Resident session (``cache_segments=True``, the default): the relation
+  is persisted, so its one shuffle is paid at session open and a query
+  batch is ONE narrow stage: cached-scan filter -> mapInPandas -> gather.
+  This is how a serving tier works: the shard layout is fixed at load
+  time, queries are routed to it.
+* Uncached session (one-shot querying, or segments too large to hold
+  resident): the filter pushes below the repartition, so a query batch
+  is a partition-pruned parquet scan plus ONE exchange of the matching
+  blocks before the same kernel.
 
 Exactness of the skipping (BMW soundness argument): for every block b of
 term t, UB(b) = idf_t*block_max(b) + sum over other query terms t' of
@@ -49,6 +50,9 @@ demand). Property-tested BMW == exhaustive in tests/.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -57,12 +61,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, IndexConfig
 from ..functions import bm25
 from ..functions.analysis import tokenize
-from ..functions.codec import (
-    decode_doc_ids,
-    decode_doc_ids_many,
-    pfor_decode,
-    pfor_decode_many,
-)
+from ..functions.codec import decode_doc_ids_many, pfor_decode_many
 from ..sources.tables import read_engine_table
 from .build import IndexPaths, index_geometry
 
@@ -131,24 +130,6 @@ class _TermBlocks:
         self._concat: dict[bytes, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self.decoded_blocks = 0
 
-    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Single-block decode (seed path; cached)."""
-        hit = self._cache.get(i)
-        if hit is None:
-            # int64 throughout the kernel: mixing uint64 with int64 in
-            # searchsorted silently upcasts to float64 (lossy past 2^53).
-            docs = decode_doc_ids(
-                int(self.first[i]), self.doc_bytes[i], int(self.n_docs[i])
-            ).astype(np.int64)
-            hit = (
-                docs,
-                pfor_decode(self.tf_bytes[i]),
-                pfor_decode(self.dl_bytes[i]),
-            )
-            self._cache[i] = hit
-            self.decoded_blocks += 1
-        return hit
-
     def decode_blocks(
         self, idxs: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -188,6 +169,8 @@ class _TermBlocks:
             )
         )
         if len(miss):
+            # int64 throughout the kernel: mixing uint64 with int64 in
+            # searchsorted silently upcasts to float64 (lossy past 2^53).
             docs, dl_ = decode_doc_ids_many(
                 self.first[miss].astype(np.uint64),
                 list(self.doc_bytes[miss]),
@@ -259,7 +242,11 @@ def _bmw_topk(
         return s
 
     # Seed theta: exactly score the docs of each term's single best block.
-    seed_parts = [t.decode(int(np.argmax(t.bmax)))[0] for t in terms if len(t.first)]
+    seed_parts = [
+        t.decode_blocks(np.array([np.argmax(t.bmax)]))[0]
+        for t in terms
+        if len(t.first)
+    ]
     if not seed_parts:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
     seed = np.unique(np.concatenate(seed_parts))
@@ -348,29 +335,6 @@ def _bmw_topk(
 # --- the Spark surface --------------------------------------------------------
 
 
-def _wand_factory(k: int, avgdl: float):
-    def wand(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        terms = [
-            _TermBlocks(float(g["idf"].iloc[0]), g)
-            for _, g in pdf.groupby("term", sort=True)
-        ]
-        docs, scores = _bmw_topk(terms, k, avgdl)
-        total = int(len(pdf))
-        decoded = int(sum(t.decoded_blocks for t in terms))
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(docs), qid, dtype=np.int32),
-                "doc_id": docs.astype(np.int64),
-                "score": scores,
-                "blocks_total": np.full(len(docs), total, dtype=np.int64),
-                "blocks_decoded": np.full(len(docs), decoded, dtype=np.int64),
-            }
-        )
-
-    return wand
-
-
 _WAND_SCHEMA = (
     "query_id int, doc_id long, score double, "
     "blocks_total long, blocks_decoded long"
@@ -378,10 +342,10 @@ _WAND_SCHEMA = (
 
 
 def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, avgdl: float):
-    """FAST-path kernel: one Arrow stream per range-partitioned segment
+    """The WAND kernel: one Arrow stream per range-partitioned segment
     partition. ``plan`` = [(query_id, {term: idf})] travels in the
     closure (bytes-tiny), so no join ever touches the blocks. Blocks of
-    one range_bucket are guaranteed co-partitioned (session-load
+    one range_bucket are guaranteed co-partitioned (the session's
     repartition), so each (query, range) WAND here is exact."""
 
     def run(batches):
@@ -454,15 +418,18 @@ GATHER_SPARK_THRESHOLD = 200_000
 
 
 class SearchSession:
-    """A resident query tier over one built index.
+    """A query tier over one built index.
 
     Load time does the heavy lifting once — corpus stats, the resident
     dictionary (bounded by ``max_resident_terms``), and the segments
-    persisted PRE-PARTITIONED BY ``range_bucket`` — so a query batch on
-    the fast path is ONE narrow-stage Spark job: cached-scan filter ->
-    mapInPandas WAND -> gather. See module docstring for the two
-    execution tiers; ``cache_segments=False`` (one-shot querying, or a
-    vocabulary too large to hold resident) selects the shuffle tier."""
+    relation PARTITIONED BY ``range_bucket``, persisted when
+    ``cache_segments=True`` — so a query batch is ONE Spark job over
+    the same kernel either way: filter -> mapInPandas WAND -> gather.
+    A resident session's job is one narrow stage over the cache; an
+    uncached session (one-shot querying, or segments too large to hold
+    resident) adds one exchange of the term-filtered blocks per batch.
+    Sessions on one root share the persisted relation; see
+    ``invalidate``."""
 
     def __init__(
         self,
@@ -485,7 +452,6 @@ class SearchSession:
         self.avgdl = float(stats["avgdl"])
         self.epoch = int(stats["epoch"])
         self._dictionary = read_engine_table(spark, self.paths.dictionary)
-        self._cached = cache_segments
         seg = read_engine_table(spark, self.paths.segments).select(*_SEG_COLS)
         # Ranges actually present (auto gather switch + partition sizing):
         # dense doc_ids make this exact.
@@ -497,25 +463,27 @@ class SearchSession:
         # other hard-fails was an inconsistent contract.
         range_bits = index_geometry(stats)[1]
         self.n_ranges_est = (self.n_docs >> range_bits) + 1
+        # Co-partition blocks by their doc range: every (query, range)
+        # WAND is then complete within one partition. A resident session
+        # pays this shuffle ONCE at open and keeps the blocks hot; an
+        # uncached one pays it per batch, over term-filtered blocks only.
+        # Partition count = the number of ranges CAPPED AT the core
+        # count: every partition schedules a task + a Python-worker
+        # round-trip PER QUERY, so partitions beyond one wave of cores
+        # only add fixed overhead (measured at 256 ranges / 32 cores: the
+        # old 4x-cores cap ran 4 task waves and put single-query median
+        # at 2.14 s; cap=cores runs one wave at 0.44 s). Ranges are
+        # near-uniform by construction (dense doc ids, fixed range
+        # width), so wave-smoothing oversubscription buys nothing.
+        n_parts = max(1, min(self.n_ranges_est,
+                             spark.sparkContext.defaultParallelism))
+        self._segments = seg.repartition(n_parts, "range_bucket")
+        self._cache_key = None
         if cache_segments:
-            # Serving-tier shard load: co-partition blocks by their doc
-            # range ONCE (this shuffle is paid at session open, never per
-            # query) and keep them hot. Every (query, range) WAND group
-            # is then complete within one cached partition, so the fast
-            # path needs no per-query exchange. Partition count = the
-            # number of ranges CAPPED AT the core count: every cached
-            # partition schedules a task + a Python-worker round-trip
-            # PER QUERY, so partitions beyond one wave of cores only add
-            # fixed overhead (measured at 256 ranges / 32 cores: the old
-            # 4x-cores cap ran 4 task waves and put single-query median
-            # at 2.14 s; cap=cores runs one wave at 0.44 s). Ranges are
-            # near-uniform by construction (dense doc ids, fixed range
-            # width), so wave-smoothing oversubscription buys nothing.
-            n_parts = max(1, min(self.n_ranges_est,
-                                 spark.sparkContext.defaultParallelism))
-            self._segments = seg.repartition(n_parts, "range_bucket").persist()
-        else:
-            self._segments = seg
+            self._cache_key = (self.paths.root, n_parts)
+            with _SESSION_LOCK:
+                _CACHE_HOLDERS.setdefault(self._cache_key, weakref.WeakSet()).add(self)
+                self._segments = self._segments.persist()
         self._resident: dict[str, tuple[int, int]] | None = None
         # ONE dictionary job decides residency AND loads the map: the
         # limit(cap + 1) overfetch reveals "too big" (len > cap) without
@@ -532,9 +500,22 @@ class SearchSession:
             }
 
     def invalidate(self) -> None:
-        """Release cached state (unpersist segments). Call when the index
-        at this root has been rebuilt or merged in place."""
-        if self._cached:
+        """Release this session's hold on the persisted segments. Call
+        when the index at this root has been rebuilt or merged in place.
+
+        Spark keys cached data by plan, so every resident session on one
+        root (at one partition count) shares one persisted relation: the
+        segments are unpersisted only when the last live session holding
+        them lets go. A second call is a no-op."""
+        with _SESSION_LOCK:
+            key, self._cache_key = self._cache_key, None
+            if key is None:
+                return
+            holders = _CACHE_HOLDERS[key]
+            holders.discard(self)
+            if holders:
+                return
+            del _CACHE_HOLDERS[key]
             try:
                 self._segments.unpersist()
             except Exception:
@@ -557,7 +538,6 @@ class SearchSession:
         k: int = 10,
         with_metrics: bool = False,
         gather: str = "auto",
-        path: str | None = None,
     ) -> DataFrame:
         """gather='driver': per-range top-k lists (<= ranges*queries*k
         tiny rows) are collected and merged at the coordinator — the
@@ -566,9 +546,8 @@ class SearchSession:
         (default) picks 'spark' once ranges*queries*k exceeds
         GATHER_SPARK_THRESHOLD — at 10^12 docs with 2^20-doc ranges a
         driver gather would pull ~1M rows per query, so the switch is
-        load-bearing, not cosmetic. ``path`` forces 'fast'/'shuffle'
-        (tests); default: fast when the session is cached. All
-        combinations produce identical rows (pinned tie-break)."""
+        load-bearing, not cosmetic. Both gathers, cached or not,
+        produce identical rows (pinned tie-break)."""
         spark = self.spark
 
         empty_schema = "query_id int, rank int, doc_id long, score double"
@@ -608,50 +587,23 @@ class SearchSession:
         if gather == "auto":
             big = self.n_ranges_est * len(queries) * k > GATHER_SPARK_THRESHOLD
             gather = "spark" if big else "driver"
-        use_fast = path == "fast" or (path is None and self._cached)
-        if use_fast and not self._cached:
-            # The fast kernel is only exact when every range_bucket's
-            # blocks are co-partitioned — which only the cache_segments
-            # repartition guarantees. On a raw scan a (term, range) group
-            # can straddle partitions and yield partial per-doc scores.
-            raise ValueError(
-                "path='fast' requires cache_segments=True "
-                "(uncached sessions must use the shuffle path)"
-            )
-
-        if use_fast:
-            # FAST path: plan in the closure, one narrow stage over the
-            # range-partitioned resident segments. The term IN-list filter
-            # is evaluated against cached-batch stats (and against parquet
-            # row groups when uncached).
-            # One linear pass over qterms, not a rescan per query id —
-            # the old per-qid comprehension was O(Q^2 * T) on the driver
-            # and would dwarf the narrow-stage win at 10k-query batches.
-            by_qid: dict[int, dict[str, float]] = {}
-            for q, t in qterms:
-                if t in idf_of:
-                    by_qid.setdefault(q, {})[t] = idf_of[t]
-            plan = sorted(by_qid.items())
-            terms_lit = sorted(idf_of)
-            blocks = self._segments.filter(
-                F.col("term_bucket").isin(buckets) & F.col("term").isin(terms_lit)
-            )
-            per_range = blocks.mapInPandas(
-                _wand_partition_factory(plan, k, self.avgdl), _WAND_SCHEMA
-            )
-        else:
-            # SHUFFLE path: broadcast join of the query-terms frame
-            # against a partition-pruned scan, then one exchange to form
-            # the (query, range) groups.
-            qrows = [
-                (qid, t, idf_of[t]) for qid, t in qterms if t in idf_of
-            ]
-            qdf = spark.createDataFrame(qrows, "query_id int, term string, idf double")
-            segments = self._segments.filter(F.col("term_bucket").isin(buckets))
-            cand = segments.join(F.broadcast(qdf), "term", "inner")
-            per_range = cand.groupBy("query_id", "range_bucket").applyInPandas(
-                _wand_factory(k, self.avgdl), _WAND_SCHEMA
-            )
+        # The plan rides in the kernel closure. One linear pass over
+        # qterms, not a rescan per query id — a per-qid comprehension is
+        # O(Q^2 * T) on the driver at 10k-query batches.
+        by_qid: dict[int, dict[str, float]] = {}
+        for q, t in qterms:
+            if t in idf_of:
+                by_qid.setdefault(q, {})[t] = idf_of[t]
+        plan = sorted(by_qid.items())
+        # Both IN-lists are evaluated against cached-batch stats, or, on
+        # an uncached session, pushed below the repartition into the
+        # parquet scan (partition pruning + row-group filter).
+        blocks = self._segments.filter(
+            F.col("term_bucket").isin(buckets) & F.col("term").isin(sorted(idf_of))
+        )
+        per_range = blocks.mapInPandas(
+            _wand_partition_factory(plan, k, self.avgdl), _WAND_SCHEMA
+        )
 
         # Q6/Q7: global merge of per-range top-k (<= ranges*queries*k rows).
         out_cols = ["query_id", "rank", "doc_id", "score"]
@@ -721,9 +673,12 @@ _SESSION_CACHE: dict[str, tuple[tuple, SearchSession]] = {}
 # drivers routinely run concurrent query threads, and the unlocked
 # del/reinsert dance raced (double-del KeyError on the hit path; two
 # sessions both persisting the same segments on the miss path).
-import threading
-
-_SESSION_LOCK = threading.Lock()
+# Re-entrant: eviction calls invalidate(), which takes it again.
+_SESSION_LOCK = threading.RLock()
+# Live resident sessions per shared persisted relation, keyed by (root,
+# n_parts); guarded by _SESSION_LOCK. A weak set, so a session dropped
+# without invalidate() stops counting as a holder.
+_CACHE_HOLDERS: dict[tuple[str, int], weakref.WeakSet] = {}
 # One construction lock PER ROOT (lock striping): SearchSession
 # construction runs several Spark jobs (segments repartition+persist,
 # dictionary sizing), so holding the global lock across it would make

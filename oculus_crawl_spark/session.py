@@ -14,6 +14,10 @@ import re
 
 from pyspark.sql import SparkSession
 
+# local[N] and local[N,maxFailures]: the masters whose core count N this
+# builder knows. local[*] and cluster masters do not match.
+_LOCAL_CORES = re.compile(r"local\[(\d+)(?:\s*,\s*\d+)?\]")
+
 
 def merge_processor_pin(
     master: str, extra_conf: dict[str, str] | None
@@ -31,7 +35,7 @@ def merge_processor_pin(
     pins ActiveProcessorCount wins. On a real cluster the resource
     manager sets executor cores and this is inert (no local[k] match)."""
     merged = dict(extra_conf or {})
-    m = re.fullmatch(r"local\[(\d+)\]", master)
+    m = _LOCAL_CORES.fullmatch(master)
     if m:
         apc = f"-XX:ActiveProcessorCount={m.group(1)}"
         prev = merged.get("spark.driver.extraJavaOptions", "")
@@ -61,7 +65,7 @@ def get_spark(
         # cores (AQE coalesces, never widens). Non-local / local[*]
         # masters keep the fixed default — executor counts are the
         # cluster manager's knowledge, not this builder's.
-        m = re.fullmatch(r"local\[(\d+)\]", master)
+        m = _LOCAL_CORES.fullmatch(master)
         shuffle_partitions = max(32, int(m.group(1))) if m else 32
 
     builder = (

@@ -61,25 +61,30 @@ def main():
     ))
     sess = SearchSession(spark, root, cache_segments=False)
     sections.append((
-        "Query, shuffle tier: broadcast join + per-range WAND + distributed merge (Q2/Q4/Q6)",
-        "The general form for uncached sessions / huge vocabularies: query "
-        "terms broadcast (never SMJ); FlatMapGroupsInPandas is the "
-        "Arrow-batched block-max WAND kernel per (query, doc-range); the "
-        "window merge only sees <= ranges*queries*k rows.",
-        plan(sess.search(["dup scan"], k=10, gather="spark", path="shuffle")),
+        "Query, uncached session: pruned scan + one range exchange + per-range WAND (Q2/Q3/Q4/Q6)",
+        "For one-shot querying / segments too large to hold resident: the "
+        "term_bucket and term filters push below the session's "
+        "range_bucket repartition into the parquet scan (PartitionFilters "
+        "+ PushedFilters), the matching blocks cross ONE range "
+        "repartition exchange (SinglePartition here: sf0.001 holds one doc "
+        "range; hashpartitioning(range_bucket) with more), and MapInPandas "
+        "runs the same block-max WAND kernel as a resident session, with "
+        "the per-term (query_id, idf) plan in its closure — no join. The "
+        "window merge above it is gather='spark' and only sees "
+        "<= ranges*queries*k rows.",
+        plan(sess.search(["dup scan"], k=10, gather="spark")),
     ))
-    fast = SearchSession(spark, root)
+    resident = SearchSession(spark, root)
     sections.append((
-        "Query, FAST serving tier: single narrow stage over the range-partitioned cache (Q2'/Q4/Q6)",
-        "Default for resident sessions: segments persist pre-partitioned by "
-        "range_bucket at session open (the Exchange inside InMemoryRelation "
-        "is that one-time load shuffle); the per-term (query_id, idf) plan "
-        "rides in the MapInPandas closure, so the query itself is "
-        "cached-scan -> Filter(term IN ...) -> MapInPandas with NO join and "
-        "NO per-query exchange. The window merge below is gather='spark'; "
-        "the default coordinator gather (ranges*queries*k below threshold) "
-        "has no post-kernel exchange at all. sf0.1 p95: 1.89s -> 1.20s.",
-        plan(fast.search(["dup scan"], k=10, gather="spark", path="fast")),
+        "Query, resident session: single narrow stage over the range-partitioned cache (Q2/Q4/Q6)",
+        "Default: the same relation, persisted at session open (the "
+        "Exchange inside InMemoryRelation is that one-time load shuffle), "
+        "so the query itself is cached-scan -> Filter(term IN ...) -> "
+        "MapInPandas with NO join and NO per-query exchange. The window "
+        "merge below is gather='spark'; the default coordinator gather "
+        "(ranges*queries*k below threshold) has no post-kernel exchange at "
+        "all.",
+        plan(resident.search(["dup scan"], k=10, gather="spark")),
     ))
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:

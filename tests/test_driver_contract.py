@@ -42,6 +42,14 @@ def _normalize(rows, colnames):
 ALL = sorted(entry_mod.queries().keys())
 
 
+def test_fulltext_entries_are_oracle_checked():
+    """__spark_entry__ registers every fulltext entry as oracle-checked;
+    an entry without oracle SQL would silently degrade to rows-only."""
+    from oculus_crawl_spark.operators import fulltext_queries
+
+    assert fulltext_queries.oracle_sql().keys() == fulltext_queries.queries().keys()
+
+
 @pytest.mark.parametrize("name", ALL)
 def test_query_matches_oracle(spark, ddb, name):
     q = entry_mod.queries()[name]

@@ -72,10 +72,9 @@ def test_empty_query_batch(spark, tmp_root):
     assert sess.search(["!!!"], k=5).collect() == []
 
 
-def test_fast_path_requires_cached_session(spark, tmp_root):
-    """path='fast' assumes range_bucket co-partitioning, which only the
-    cache_segments repartition guarantees — an uncached session must
-    refuse rather than return silently-partial scores."""
+def test_uncached_session_answers(spark, tmp_root):
+    """An uncached session co-partitions the matching blocks by range
+    per batch, so it answers with full per-doc scores."""
     build_index(
         spark.createDataFrame(
             [(1, "a b c"), (2, "a c d")], "doc_id long, text string"
@@ -83,9 +82,6 @@ def test_fast_path_requires_cached_session(spark, tmp_root):
         tmp_root,
     )
     sess = SearchSession(spark, tmp_root, cache_segments=False)
-    with pytest.raises(ValueError, match="cache_segments"):
-        sess.search(["a"], k=5, path="fast")
-    # the shuffle path still works uncached
     assert len(sess.search(["a"], k=5).collect()) == 2
 
 

@@ -155,7 +155,41 @@ def test_processor_pin_survives_caller_extra_java_options():
     assert merge_processor_pin("local[4]", None)[
         "spark.driver.extraJavaOptions"
     ] == "-XX:ActiveProcessorCount=4"
+    # local[N,maxFailures] (task retries) still pins N cores
+    for master in ("local[4,3]", "local[4, 3]"):
+        assert merge_processor_pin(master, None)[
+            "spark.driver.extraJavaOptions"
+        ] == "-XX:ActiveProcessorCount=4", master
+    assert "spark.driver.extraJavaOptions" not in merge_processor_pin(
+        "local[*,3]", {}
+    )
     # the input dict is not mutated
     src = {"a": "b"}
     merge_processor_pin("local[2]", src)
     assert src == {"a": "b"}
+
+
+def test_build_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """build_index submits its finalize writes from pool threads. Job
+    groups are thread-local, so those writes must inherit the caller's
+    group, or per-layer attribution by job group loses them: no new
+    group-less job may appear during a grouped build."""
+    from oculus_crawl_spark.operators.build import build_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener_bus = sc._jsc.sc().listenerBus()
+    corpus = spark.createDataFrame(
+        [(1, "a b c"), (2, "a c d")], "doc_id long, text string"
+    )
+    listener_bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("grouped-build", "build under a job group")
+    try:
+        build_index(corpus, str(tmp_path / "idx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    listener_bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("grouped-build")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

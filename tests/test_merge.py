@@ -7,6 +7,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +63,37 @@ def test_merge_dictionary_matches_full_build(spark, merged_setup):
         for r in spark.read.parquet(f"{tmp}/full/dictionary").collect()
     }
     assert m == f
+
+
+def test_merged_segments_equal_full_build_blocks(spark, merged_setup):
+    """The merge kernel and build phase 2 write blocks through the same
+    re-block routine, so the merge of two half-corpus epochs stores the
+    full build's blocks row for row. block_max_tf_norm may differ by one
+    float32 ulp: the two avgdl values agree only to ~1e-9 (different
+    summation order), and the bound is rounded up from float64."""
+    tmp, _res, _full = merged_setup
+    exact = [
+        "block_id", "first_doc", "last_doc", "n_docs", "sum_tf",
+        "doc_bytes", "tf_bytes", "dl_bytes",
+    ]
+
+    def blocks(root):
+        rows = (
+            spark.read.parquet(f"{root}/segments")
+            .select("term", "range_bucket", *exact, "block_max_tf_norm")
+            .collect()
+        )
+        return sorted(rows, key=lambda r: (r["term"], r["range_bucket"], r["block_id"]))
+
+    merged, full = blocks(f"{tmp}/merged"), blocks(f"{tmp}/full")
+    assert len(merged) == len(full) > 0
+    for m, f in zip(merged, full):
+        key = (m["term"], m["range_bucket"])
+        assert key == (f["term"], f["range_bucket"])
+        assert [m[c] for c in exact] == [f[c] for c in exact], key
+        a = np.float32(m["block_max_tf_norm"])
+        b = np.float32(f["block_max_tf_norm"])
+        assert abs(int(a.view(np.int32)) - int(b.view(np.int32))) <= 1, key
 
 
 def test_merge_latest_epoch_wins(spark):

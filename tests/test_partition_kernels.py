@@ -1,5 +1,6 @@
 """Pure-NumPy tests for the partition-level kernel helpers (no Spark):
-group-boundary detection and the dense-ID offset bookkeeping."""
+group-boundary detection, the shared re-block routine and the dense-ID
+offset bookkeeping."""
 
 from __future__ import annotations
 
@@ -7,7 +8,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from oculus_crawl_spark.operators.build import _group_slices
+from oculus_crawl_spark.functions import bm25
+from oculus_crawl_spark.functions.codec import encode_doc_gaps, pfor_encode
+from oculus_crawl_spark.operators.build import _group_slices, reblock
 
 
 def test_group_slices_basic():
@@ -46,6 +49,68 @@ def test_group_slices_covers_exactly_once(vals):
             assert arr[covered[-1][1] - 1] != arr[s]
         covered.append((s, e))
     assert sum(e - s for s, e in covered) == len(arr)
+
+
+def _reblock_reference(gid, docs, tfs, dls, avgdl, bs):
+    """Naive per-block loop: the build's and the merge's re-block loop
+    before both moved to the vectorized ``reblock``."""
+    out = {k: [] for k in (
+        "group", "block_id", "first_doc", "last_doc", "n_docs", "sum_tf",
+        "block_max_tf_norm", "doc_bytes", "tf_bytes", "dl_bytes",
+    )}
+    for s, e in _group_slices(gid):
+        norms = bm25.tf_norm(tfs[s:e], dls[s:e], avgdl)
+        for bid, start in enumerate(range(s, e, bs)):
+            stop = min(start + bs, e)
+            d = docs[start:stop]
+            out["group"].append(gid[s])
+            out["block_id"].append(bid)
+            out["first_doc"].append(int(d[0]))
+            out["last_doc"].append(int(d[-1]))
+            out["n_docs"].append(len(d))
+            out["sum_tf"].append(int(tfs[start:stop].sum()))
+            out["block_max_tf_norm"].append(
+                bm25.bmax32(norms[start - s : stop - s].max())
+            )
+            out["doc_bytes"].append(encode_doc_gaps(d.astype(np.uint64)))
+            out["tf_bytes"].append(pfor_encode(tfs[start:stop]))
+            out["dl_bytes"].append(pfor_encode(dls[start:stop]))
+    return out
+
+
+_BS = 4
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.sampled_from([1, _BS, _BS + 1]), st.integers(1, 4 * _BS + 3)
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    st.integers(0, 2**31),
+    st.floats(1.0, 50.0),
+)
+@settings(max_examples=200, deadline=None)
+def test_reblock_matches_per_block_loop(group_lens, seed, avgdl):
+    """The vectorized re-block (reduceat bounds, batched encode) equals
+    the per-block loop on every column, byte for byte — including groups
+    of length 1, bs and bs+1, where a block boundary is off by one."""
+    rng = np.random.default_rng(seed)
+    gid = np.repeat(np.arange(len(group_lens)) * 3, group_lens)
+    docs = np.concatenate([
+        np.sort(rng.choice(10 * n + 5, n, replace=False)) for n in group_lens
+    ]).astype(np.uint64)
+    tfs = rng.integers(1, 40, len(docs)).astype(np.uint64)
+    dls = rng.integers(1, 900, len(docs)).astype(np.uint64)
+
+    got = reblock(gid, docs, tfs, dls, avgdl, _BS)
+    ref = _reblock_reference(gid, docs, tfs, dls, avgdl, _BS)
+    assert list(got) == list(ref)
+    for col, want in ref.items():
+        assert list(got[col]) == want, col
+    assert got["block_max_tf_norm"].dtype == np.float32
 
 
 @given(

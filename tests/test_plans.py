@@ -1,7 +1,8 @@
 """Physical-plan assertions: the scale-critical plan properties are
 enforced in CI, not just eyeballed — filter pushdown to parquet,
-partition pruning on term_bucket, broadcast (never SMJ) of query terms,
-map-side partial aggregation, and no row-at-a-time Python anywhere."""
+partition pruning on term_bucket, no join of the query's blocks on
+either session kind, map-side partial aggregation, and no
+row-at-a-time Python anywhere."""
 
 from __future__ import annotations
 
@@ -46,20 +47,36 @@ def test_segments_scan_is_partition_pruned(spark, index_sf0001):
     assert "term_bucket" in pf  # pruning, not a post-scan filter
 
 
-def test_query_shuffle_path_join_is_broadcast_never_smj(spark, index_sf0001):
-    sess = SearchSession(spark, index_sf0001)
-    df = sess.search(["dup scan"], k=10, gather="spark", path="shuffle")
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
+def test_query_uncached_plan_is_pruned_scan_one_exchange(spark, index_sf0001):
+    """An uncached session runs the resident session's kernel over the
+    parquet scan: the term filters push below the range repartition into
+    the scan (partition pruning on term_bucket, pushed filter on term),
+    and the blocks cross exactly one Exchange before MapInPandas — no
+    join, no grouped-map Python."""
+    # Cached sessions on this root share its plan, and Spark's cache
+    # manager would substitute their relation into this one's query.
+    spark.catalog.clearCache()
+    sess = SearchSession(spark, index_sf0001, cache_segments=False)
+    df = sess.search(["dup scan"], k=10, gather="spark")
+    formatted = _plan(df)
+    assert "term_bucket" in formatted.split("PartitionFilters")[1][:250]
+    assert "term" in formatted.split("PushedFilters")[1][:250]
+    plan = _plan(df, mode="simple")
+    assert "InMemoryTableScan" not in plan
+    assert "Join" not in plan and "FlatMapGroupsInPandas" not in plan
+    # simple mode prints root-down: below the kernel sits exactly one
+    # Exchange, the session's range repartition.
+    below = plan.split("MapInPandas", 1)[1]
+    assert below.count("Exchange") == 1
+    assert "REPARTITION_BY_NUM" in below
 
 
 def test_query_fast_path_is_single_narrow_stage(spark, index_sf0001):
-    """The serving-tier fast path must not shuffle or join the blocks:
+    """A resident session must not shuffle or join the blocks:
     cached scan -> filter -> MapInPandas. The only Exchange allowed in
     the gather='spark' plan is the final tiny top-k window merge."""
     sess = SearchSession(spark, index_sf0001)
-    df = sess.search(["dup scan"], k=10, gather="spark", path="fast")
+    df = sess.search(["dup scan"], k=10, gather="spark")
     plan = _plan(df, mode="simple")
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan

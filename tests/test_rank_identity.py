@@ -152,24 +152,28 @@ def test_gather_modes_identical(spark, index_sf0001, query_set):
 
 
 def test_fast_and_shuffle_paths_identical(spark, index_sf0001, query_set):
-    """The closure-plan fast path and the broadcast-join shuffle path
-    are two physical strategies for the same operator — rows must be
-    identical across both, under both gather modes."""
+    """A resident session (persisted range-partitioned segments) and an
+    uncached one (the same repartition per batch, over the parquet scan)
+    run one kernel on two physical inputs — rows must be identical
+    across both, under both gather modes."""
     from oculus_crawl_spark.operators.query import SearchSession
 
-    sess = SearchSession(spark, index_sf0001)
+    cached = SearchSession(spark, index_sf0001)
+    uncached = SearchSession(spark, index_sf0001, cache_segments=False)
     queries = query_set["queries"][:12]
-    ref = sorted(
-        map(tuple, sess.search(queries, k=10, gather="driver", path="fast").collect())
-    )
-    for gather in ("driver", "spark"):
-        got = sorted(
-            map(
-                tuple,
-                sess.search(queries, k=10, gather=gather, path="shuffle").collect(),
-            )
+    try:
+        ref = sorted(
+            map(tuple, cached.search(queries, k=10, gather="driver").collect())
         )
-        assert got == ref, gather
+        assert ref
+        for sess in (cached, uncached):
+            for gather in ("driver", "spark"):
+                got = sorted(
+                    map(tuple, sess.search(queries, k=10, gather=gather).collect())
+                )
+                assert got == ref, (sess is cached, gather)
+    finally:
+        cached.invalidate()
 
 
 def test_auto_gather_switches_on_scale(spark, index_sf0001):
@@ -220,7 +224,10 @@ def test_metrics_decoded_never_exceeds_total(spark, index_sf0001):
 
 def test_session_cache_lru_eviction(spark, index_sf0001, tmp_path):
     """At cap 1, searching a second index root must evict (and unpersist)
-    the first root's resident session."""
+    the first root's resident session. The first root is the fresh one:
+    sessions on one root share its persisted segments, and eviction
+    releases only the evicted session's hold — a live session another
+    test left on the shared fixture root keeps them cached."""
     from oculus_crawl_spark.operators import query as qmod
     from oculus_crawl_spark.operators.build import build_index
 
@@ -232,15 +239,16 @@ def test_session_cache_lru_eviction(spark, index_sf0001, tmp_path):
     qmod._SESSION_CACHE.clear()
     try:
         qmod.SESSION_CACHE_CAP = 1
+        before = search(spark, other, ["dup"], k=5).collect()
+        assert before
+        assert list(qmod._SESSION_CACHE) == [other]
+        first = qmod._SESSION_CACHE[other][1]
+        assert first._segments.is_cached
         search(spark, index_sf0001, ["dup"], k=5).collect()
         assert list(qmod._SESSION_CACHE) == [index_sf0001]
-        first = qmod._SESSION_CACHE[index_sf0001][1]
-        assert first._segments.is_cached
-        search(spark, other, ["dup"], k=5).collect()
-        assert list(qmod._SESSION_CACHE) == [other]
         assert not first._segments.is_cached  # evicted AND unpersisted
         # The evicted root still works (fresh session on next use).
-        assert search(spark, index_sf0001, ["dup"], k=5).collect()
+        assert search(spark, other, ["dup"], k=5).collect() == before
     finally:
         qmod.SESSION_CACHE_CAP = old_cap
         for s in qmod._SESSION_CACHE.values():

@@ -134,6 +134,38 @@ def test_cached_root_invalidation_releases_resident_sessions(monkeypatch):
         shutil.rmtree(owned, ignore_errors=True)
 
 
+def test_invalidate_keeps_other_sessions_cache_on_same_root(spark):
+    """Spark keys cached data by plan, so resident sessions on one root
+    share one persisted relation. Invalidating one session must not drop
+    another live session's cache (its next query would silently re-run
+    the repartition shuffle); the last holder's release unpersists it,
+    and a repeated invalidate() of one session releases nothing more."""
+    import contextlib
+    import io
+
+    def cached_plan(sess) -> bool:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            sess.search(["shared"], k=5, gather="spark").explain()
+        return "InMemoryTableScan" in buf.getvalue()
+
+    tmp = tempfile.mkdtemp(prefix="ocs_shared_")
+    try:
+        root = f"{tmp}/idx"
+        build_index(_mini_corpus(spark, "shared"), root)
+        a = Q.SearchSession(spark, root)
+        b = Q.SearchSession(spark, root)
+        assert cached_plan(a) and cached_plan(b)
+        a.invalidate()
+        a.invalidate()  # no-op: must not release b's hold
+        assert cached_plan(b)
+        assert len(b.search(["shared"], k=5).collect()) == 5
+        b.invalidate()
+        assert not cached_plan(b)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_inplace_rebuild_detected_under_eviction_pressure(spark, small_cap):
     tmp = tempfile.mkdtemp(prefix="ocs_stale_")
     try:

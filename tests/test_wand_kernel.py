@@ -97,7 +97,7 @@ def test_block_max_soundness(data):
         idf = float(bm25.idf(n_docs, np.array([len(docs)]))[0])
         tb = make_term_blocks(idf, docs, tfs, dls[docs])
         for i in range(len(tb.first)):
-            bd, bt, bl = tb.decode(i)
+            bd, bt, bl = tb.decode_blocks(np.array([i]))
             true_max = (idf * bm25.tf_norm(bt, bl, _AVGDL)).max()
             assert true_max <= tb.bmax[i] + 1e-12
 
@@ -106,8 +106,8 @@ def test_term_blocks_decode_blocks_cache_mixing():
     """decode_blocks must return identical arrays across all cache
     states: cold batch, full re-request (concat-cache hit), a subset
     after a full decode (per-block cache path), and a superset after a
-    partial decode (mixed hit/miss path) — and agree with single-block
-    decode()."""
+    partial decode (mixed hit/miss path) — and agree with a cold
+    single-block decode (the WAND seed's call)."""
     import numpy as np
     import pandas as pd
 
@@ -154,7 +154,7 @@ def test_term_blocks_decode_blocks_cache_mixing():
         assert np.array_equal(a, b)
     # seed-path single decode agrees
     tb2 = fresh()
-    d0 = tb2.decode(3)
+    d0 = tb2.decode_blocks(np.array([3]))
     off = int(np.cumsum(pdf["n_docs"].to_numpy())[2])
     n3 = int(pdf["n_docs"].iloc[3])
     assert np.array_equal(d0[0], ref[0][off : off + n3])
