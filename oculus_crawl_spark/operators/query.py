@@ -428,8 +428,10 @@ class SearchSession:
     A resident session's job is one narrow stage over the cache; an
     uncached session (one-shot querying, or segments too large to hold
     resident) adds one exchange of the term-filtered blocks per batch.
-    Sessions on one root share the persisted relation; see
-    ``invalidate``."""
+    Sessions on one root share the persisted relation (an uncached one
+    reads it too while a resident session holds it); see ``invalidate``.
+    Opening a session on a root rebuilt in place unpersists the older
+    version's relation, so the new session reads the new blocks."""
 
     def __init__(
         self,
@@ -442,6 +444,9 @@ class SearchSession:
         self.spark = spark
         self.cfg = cfg
         self.paths = IndexPaths(index_root)
+        # Taken before anything is read, so a rebuild racing this open
+        # shows as a changed signature at the next open.
+        sig = _index_signature(index_root, spark)
         # read_engine_table, not read.parquet: build_index writes these
         # through the Iceberg-or-Parquet shim, and a session configured
         # for the catalog backend has no parquet files at these paths —
@@ -478,11 +483,22 @@ class SearchSession:
         n_parts = max(1, min(self.n_ranges_est,
                              spark.sparkContext.defaultParallelism))
         self._segments = seg.repartition(n_parts, "range_bucket")
-        self._cache_key = None
-        if cache_segments:
-            self._cache_key = (self.paths.root, n_parts)
-            with _SESSION_LOCK:
-                _CACHE_HOLDERS.setdefault(self._cache_key, weakref.WeakSet()).add(self)
+        self._hold = None
+        root = self.paths.root.rstrip("/")
+        with _SESSION_LOCK:
+            # Spark substitutes ANY persisted relation with this plan —
+            # and a parquet scan's plan is its root path, not the files
+            # — into this session's reads, cached or not. So first drop
+            # every hold on this root that caches another index version
+            # or that no live session holds any more.
+            _drop_holds(root, sig)
+            if cache_segments:
+                key = (root, n_parts)
+                hold = _HOLDS.get(key)
+                if hold is None:
+                    hold = _HOLDS[key] = _Hold(key, sig, self._segments)
+                hold.holders.add(self)
+                self._hold = hold
                 self._segments = self._segments.persist()
         self._resident: dict[str, tuple[int, int]] | None = None
         # ONE dictionary job decides residency AND loads the map: the
@@ -508,18 +524,13 @@ class SearchSession:
         segments are unpersisted only when the last live session holding
         them lets go. A second call is a no-op."""
         with _SESSION_LOCK:
-            key, self._cache_key = self._cache_key, None
-            if key is None:
+            hold, self._hold = self._hold, None
+            if hold is None:
                 return
-            holders = _CACHE_HOLDERS[key]
-            holders.discard(self)
-            if holders:
-                return
-            del _CACHE_HOLDERS[key]
-            try:
-                self._segments.unpersist()
-            except Exception:
-                pass
+            hold.holders.discard(self)
+            if not hold.holders and _HOLDS.get(hold.key) is hold:
+                del _HOLDS[hold.key]
+                _unpersist(hold.relation)
 
     def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         if self._resident is not None:
@@ -675,10 +686,45 @@ _SESSION_CACHE: dict[str, tuple[tuple, SearchSession]] = {}
 # sessions both persisting the same segments on the miss path).
 # Re-entrant: eviction calls invalidate(), which takes it again.
 _SESSION_LOCK = threading.RLock()
-# Live resident sessions per shared persisted relation, keyed by (root,
-# n_parts); guarded by _SESSION_LOCK. A weak set, so a session dropped
-# without invalidate() stops counting as a holder.
-_CACHE_HOLDERS: dict[tuple[str, int], weakref.WeakSet] = {}
+
+
+class _Hold:
+    """One persisted segments relation, shared by the live resident
+    sessions on one (root, n_parts) that opened the index version
+    ``sig``. ``holders`` is a weak set, so a session dropped without
+    ``invalidate()`` stops counting as a holder."""
+
+    __slots__ = ("key", "sig", "relation", "holders")
+
+    def __init__(self, key: tuple[str, int], sig: tuple, relation: DataFrame):
+        self.key = key
+        self.sig = sig
+        self.relation = relation
+        self.holders = weakref.WeakSet()
+
+
+# The current hold per (root, n_parts); guarded by _SESSION_LOCK.
+_HOLDS: dict[tuple[str, int], _Hold] = {}
+
+
+def _unpersist(relation: DataFrame) -> None:
+    try:
+        relation.unpersist()
+    except Exception:
+        pass
+
+
+def _drop_holds(root: str, sig: tuple) -> None:
+    """Unpersist the holds that no live session holds, and every hold on
+    ``root`` cached from an index version other than ``sig``: a session
+    still holding one serves a rebuilt root stale anyway. Caller holds
+    _SESSION_LOCK."""
+    for key, hold in list(_HOLDS.items()):
+        if not hold.holders or (key[0] == root and hold.sig != sig):
+            del _HOLDS[key]
+            _unpersist(hold.relation)
+
+
 # One construction lock PER ROOT (lock striping): SearchSession
 # construction runs several Spark jobs (segments repartition+persist,
 # dictionary sizing), so holding the global lock across it would make
@@ -709,7 +755,8 @@ def _index_signature(index_root: str, spark: SparkSession | None = None) -> tupl
     across calls and serve a stale cached session FOREVER after an
     in-place rewrite — the exact staleness this token exists to catch.
     The cost is honest: search() rebuilds the session on every call for
-    such roots; hold a ``SearchSession`` directly to serve them
+    such roots, and every session open on one drops the others' cached
+    segments; hold one ``SearchSession`` directly to serve them
     resident."""
     import os
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,16 +48,17 @@ def test_segments_scan_is_partition_pruned(spark, index_sf0001):
     assert "term_bucket" in pf  # pruning, not a post-scan filter
 
 
-def test_query_uncached_plan_is_pruned_scan_one_exchange(spark, index_sf0001):
+def test_query_uncached_plan_is_pruned_scan_one_exchange(spark, index_sf0001, tmp_path):
     """An uncached session runs the resident session's kernel over the
     parquet scan: the term filters push below the range repartition into
     the scan (partition pruning on term_bucket, pushed filter on term),
     and the blocks cross exactly one Exchange before MapInPandas — no
     join, no grouped-map Python."""
-    # Cached sessions on this root share its plan, and Spark's cache
-    # manager would substitute their relation into this one's query.
-    spark.catalog.clearCache()
-    sess = SearchSession(spark, index_sf0001, cache_segments=False)
+    # A copy at a fresh root: a resident session on the fixture root
+    # shares this plan, and Spark would substitute its cached relation.
+    root = str(tmp_path / "idx")
+    shutil.copytree(index_sf0001, root)
+    sess = SearchSession(spark, root, cache_segments=False)
     df = sess.search(["dup scan"], k=10, gather="spark")
     formatted = _plan(df)
     assert "term_bucket" in formatted.split("PartitionFilters")[1][:250]

@@ -15,6 +15,9 @@ many index roots and merges indexes in place, so the cache must:
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import io
 import os
 import shutil
 import tempfile
@@ -44,6 +47,14 @@ def _mini_corpus(spark, marker: str, n: int = 30):
 def _top_doc(spark, root: str, term: str) -> int:
     rows = Q.search(spark, root, [term], k=1).collect()
     return int(rows[0]["doc_id"]) if rows else -1
+
+
+def _reads_cache(sess, term: str = "shared") -> bool:
+    """Whether a query batch of ``sess`` reads persisted segments."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        sess.search([term], k=5, gather="spark").explain()
+    return "InMemoryTableScan" in buf.getvalue()
 
 
 def _drain_session_cache():
@@ -140,15 +151,7 @@ def test_invalidate_keeps_other_sessions_cache_on_same_root(spark):
     another live session's cache (its next query would silently re-run
     the repartition shuffle); the last holder's release unpersists it,
     and a repeated invalidate() of one session releases nothing more."""
-    import contextlib
-    import io
-
-    def cached_plan(sess) -> bool:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            sess.search(["shared"], k=5, gather="spark").explain()
-        return "InMemoryTableScan" in buf.getvalue()
-
+    cached_plan = _reads_cache
     tmp = tempfile.mkdtemp(prefix="ocs_shared_")
     try:
         root = f"{tmp}/idx"
@@ -192,6 +195,62 @@ def test_inplace_rebuild_detected_under_eviction_pressure(spark, small_cap):
         assert len(Q._SESSION_CACHE) <= Q.SESSION_CACHE_CAP
     finally:
         _drain_session_cache()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_inplace_rebuild_under_held_session_serves_new_blocks(spark):
+    """A session held across an in-place rebuild keeps its hold, and
+    Spark substitutes a persisted relation into any read with the same
+    plan; a parquet scan's plan names the root path, not its files. So
+    the sessions opened on the rebuilt root (resident through search(),
+    and uncached) must drop the old version's cache and read the new
+    blocks, not the held session's. The new index is built elsewhere
+    and moved in, as another process's rebuild would be: a write through
+    this Spark context to the root would itself refresh the cache."""
+    tmp = tempfile.mkdtemp(prefix="ocs_held_")
+    held = None
+    try:
+        root = f"{tmp}/idx"
+        build_index(_mini_corpus(spark, "alpha"), root)
+        _drain_session_cache()
+        held = Q.SearchSession(spark, root)
+        assert len(held.search(["alpha"], k=50).collect()) == 30
+        assert len(Q.search(spark, root, ["alpha"], k=50).collect()) == 30
+
+        build_index(_mini_corpus(spark, "omega", n=20), f"{tmp}/new")
+        time.sleep(0.05)
+        shutil.rmtree(root)
+        os.rename(f"{tmp}/new", root)
+        for entry in os.scandir(os.path.join(root, "corpus_stats")):
+            os.utime(entry.path)
+
+        assert len(Q.search(spark, root, ["omega"], k=50).collect()) == 20
+        assert len(Q.search(spark, root, ["alpha"], k=50).collect()) == 0
+        uncached = Q.SearchSession(spark, root, cache_segments=False)
+        assert len(uncached.search(["omega"], k=50).collect()) == 20
+    finally:
+        if held is not None:
+            held.invalidate()
+        _drain_session_cache()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_dropped_session_cache_released_at_next_open(spark):
+    """A resident session dropped without invalidate() stops holding its
+    segments; the next session opened on that root unpersists them, so
+    an uncached session there runs its own scan."""
+    tmp = tempfile.mkdtemp(prefix="ocs_dropped_")
+    try:
+        root = f"{tmp}/idx"
+        build_index(_mini_corpus(spark, "dropped"), root)
+        sess = Q.SearchSession(spark, root)
+        assert _reads_cache(sess, "dropped")
+        del sess
+        gc.collect()
+        uncached = Q.SearchSession(spark, root, cache_segments=False)
+        assert not _reads_cache(uncached, "dropped")
+        assert len(uncached.search(["dropped"], k=50).collect()) == 30
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
