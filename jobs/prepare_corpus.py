@@ -59,7 +59,7 @@ def main() -> None:
     # roughly doubling the job's cost for a stats line.
     from oculus_crawl_spark.sources.tables import read_engine_table
 
-    n_out = read_engine_table(spark, args.out).count()
+    n_out = read_engine_table(spark, args.out, out.schema).count()
     print(
         json.dumps(
             {

@@ -27,8 +27,15 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   (document-partitioned search — operators/query.py).
 * segments is written partitioned by term_bucket => query-time partition
   pruning touches only buckets containing query terms (op Q3).
-* dictionary/doclen/lineage are derived FROM the committed segments /
-  postings tables, so stats can never drift from the written index.
+* One path for every corpus: an empty corpus, or one whose texts all
+  tokenize to nothing, runs the same stages over zero rows. Engine
+  tables are read with their declared schemas (schemas.py), so an empty
+  partitioned segments table reads as 0 rows rather than failing
+  schema inference.
+* One commit point: the build and the merge both finalize through
+  ``commit_index``. The dictionary is derived FROM the committed
+  segments, so stats can never drift from the written index, and
+  corpus_stats is written strictly last.
 """
 
 from __future__ import annotations
@@ -134,7 +141,9 @@ def _prior_hot_group_df(
     only ever raises S (the safe direction)."""
     p = IndexPaths(prior_index)
     try:
-        rows = read_engine_table(spark, p.corpus_stats).collect()
+        rows = read_engine_table(
+            spark, p.corpus_stats, schemas.CORPUS_STATS
+        ).collect()
         if not rows:
             return None
         try:
@@ -142,7 +151,7 @@ def _prior_hot_group_df(
         except ValueError:
             return None  # pre-geometry prior: unusable as a hint
         m = (
-            read_engine_table(spark, p.segments)
+            read_engine_table(spark, p.segments, schemas.SEGMENTS)
             .groupBy("term", "range_bucket")
             .agg(F.sum("n_docs").alias("g"))
             .agg(F.max("g").alias("m"))
@@ -213,6 +222,81 @@ def derive_dictionary(seg: DataFrame) -> DataFrame:
     )
 
 
+def segment_lineage(
+    seg: DataFrame, epoch: int, stage: str, wall_ms: int
+) -> DataFrame:
+    """E13: one LINEAGE_METRICS row per term_bucket of committed
+    segments — input_rows = postings, output_rows = blocks, bytes_out =
+    blob bytes — with the driver-measured ``wall_ms`` of the stage. The
+    build's lineage and each merge wave's manifest rows both come from
+    here."""
+    return (
+        seg.groupBy("term_bucket")
+        .agg(
+            F.sum("n_docs").cast("long").alias("input_rows"),
+            F.count("*").cast("long").alias("output_rows"),
+            F.sum(
+                F.length("doc_bytes") + F.length("tf_bytes") + F.length("dl_bytes")
+            )
+            .cast("long")
+            .alias("bytes_out"),
+        )
+        .select(
+            F.lit(epoch).cast("long").alias("epoch"),
+            F.lit(stage).alias("stage"),
+            F.col("term_bucket").cast("int").alias("partition_id"),
+            "input_rows",
+            "output_rows",
+            "bytes_out",
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
+            F.lit("done").alias("status"),
+        )
+    )
+
+
+def commit_index(
+    spark: SparkSession,
+    paths: IndexPaths,
+    doclen: DataFrame,
+    stats: tuple,
+    lineage: DataFrame | None = None,
+) -> None:
+    """Finalize an index whose segments are committed — the one commit
+    routine of the build and the merge.
+
+    Reads the committed segments with their declared schema, then writes
+    the dictionary derived from them, ``doclen`` and the optional
+    ``lineage`` rows (overwrite: a rebuild into a reused root must not
+    accumulate duplicate lineage rows) concurrently from driver threads,
+    so their fixed per-job latencies overlap. Spark job groups are
+    thread-local; ``inheritable_thread_target`` carries the caller's
+    group into the pool threads. ``stats`` is the corpus_stats row in
+    schemas.CORPUS_STATS order.
+
+    corpus_stats is written ALONE, strictly AFTER the others: the
+    serving tier's staleness token (query._index_signature) is the
+    corpus_stats file listing, on the contract that every build and
+    merge rewrites corpus_stats LAST. If it raced ahead, a concurrent
+    search() could cache a session built over a half-written dictionary
+    under the final signature and serve it indefinitely."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    seg = read_engine_table(spark, paths.segments, schemas.SEGMENTS)
+    tables = [(derive_dictionary(seg), paths.dictionary), (doclen, paths.doclen)]
+    if lineage is not None:
+        tables.append((lineage, paths.lineage))
+    write = inheritable_thread_target(spark)(write_table)
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        for f in [pool.submit(write, df, path) for df, path in tables]:
+            f.result()
+    write_table(
+        spark.createDataFrame([stats], schema=schemas.CORPUS_STATS),
+        paths.corpus_stats,
+    )
+
+
 def index_geometry(stats_row) -> tuple[int, int]:
     """(n_term_buckets, range_bits) from a corpus_stats row.
 
@@ -220,9 +304,10 @@ def index_geometry(stats_row) -> tuple[int, int]:
     LOUDLY on every surface — merge and serving alike — rather than one
     surface falling back to the process cfg (which silently mis-sizes
     the cached layout and tombstone lookups whenever the cfg differs
-    from the build's). Old-format indexes require a rebuild."""
-    fields = stats_row.__fields__
-    if "n_term_buckets" not in fields or "range_bits" not in fields:
+    from the build's). Old-format indexes require a rebuild. Read with
+    the declared schema, their missing columns arrive as NULL."""
+    fields = stats_row.asDict()
+    if fields.get("n_term_buckets") is None or fields.get("range_bits") is None:
         raise ValueError(
             "corpus_stats predates self-describing index geometry "
             "(missing n_term_buckets/range_bits); rebuild this index "
@@ -340,15 +425,6 @@ _TARGET_KEYS_PER_ID_BUCKET = 4_000_000
 
 def assign_dense_ids(
     df: DataFrame, key_col: str, id_col: str, n_partitions: int | None = None
-) -> DataFrame:
-    """See assign_dense_ids_resolved — this wrapper drops the resolved
-    bucket count for callers that don't pin it."""
-    out, _n = assign_dense_ids_resolved(df, key_col, id_col, n_partitions)
-    return out
-
-
-def assign_dense_ids_resolved(
-    df: DataFrame, key_col: str, id_col: str, n_partitions: int | None = None
 ) -> tuple[DataFrame, int]:
     """Dense deterministic 64-bit IDs for a unique key column (SURVEY
     §7.4). hash64(key) collides at scale (~27k birthday collisions at
@@ -428,13 +504,6 @@ def assign_dense_ids_resolved(
     return out, n_partitions
 
 
-def assign_doc_ids(
-    prepared: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """Dense deterministic docIDs keyed by url (see assign_dense_ids)."""
-    return assign_dense_ids(prepared, "url", "doc_id", n_partitions)
-
-
 def term_dimension(postings_raw: DataFrame, cfg: IndexConfig = DEFAULT) -> DataFrame:
     """(term) -> (term, term_id, term_bucket): dense numeric term IDs +
     the FNV partition bucket. Vocabulary-sized (≪ postings); the bucket
@@ -452,9 +521,8 @@ def term_dimension(postings_raw: DataFrame, cfg: IndexConfig = DEFAULT) -> DataF
     # NULL terms are the explode_outer sentinels for empty docs (they
     # exist for doclen only) — never vocabulary entries.
     vocab = postings_raw.select("term").filter(F.col("term").isNotNull()).distinct()
-    return assign_dense_ids(vocab, "term", "term_id").withColumn(
-        "term_bucket", bucket_udf("term")
-    )
+    vocab_ids, _ = assign_dense_ids(vocab, "term", "term_id")
+    return vocab_ids.withColumn("term_bucket", bucket_udf("term"))
 
 
 # --- E3/E4/E5: tokenize, doc length, tf triples ------------------------------
@@ -794,58 +862,10 @@ def build_index(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     ).collect()[0]
     n_docs = int(stats_row["n_docs"])
-    # Empty corpus: write a well-formed empty index (explicit schemas —
-    # an empty partitioned write is unreadable otherwise); searches
-    # then return [].
-    if n_docs == 0:
-        for path, schema in (
-            (paths.segments, schemas.SEGMENTS),
-            (paths.dictionary, schemas.DICTIONARY),
-            (paths.doclen, schemas.DOCLEN),
-        ):
-            write_table(spark.createDataFrame([], schema), path)
-        write_table(
-            spark.createDataFrame(
-                [(0, 0.0, epoch, cfg.analysis_version,
-                  cfg.n_term_buckets, cfg.range_bits)],
-                schema=schemas.CORPUS_STATS
-            ),
-            paths.corpus_stats,
-        )
-        postings.unpersist()
-        postings_raw.unpersist()
-        terms_dim.unpersist()
-        doclen.unpersist()
-        wall = time.monotonic() - t0
-        return BuildResult(paths, 0, 0.0, wall, 0.0)
-    avgdl = float(stats_row["avgdl"])
-
-    # All-empty-texts corpus (n_docs > 0 but zero vocabulary): same
-    # empty segments/dictionary, but REAL doclen/stats — the docs exist,
-    # they just match nothing.
-    if not terms_dim.head(1):
-        for path, schema in (
-            (paths.segments, schemas.SEGMENTS),
-            (paths.dictionary, schemas.DICTIONARY),
-        ):
-            write_table(spark.createDataFrame([], schema), path)
-        write_table(doclen, paths.doclen)
-        write_table(
-            spark.createDataFrame(
-                [(n_docs, avgdl, epoch, cfg.analysis_version,
-                  cfg.n_term_buckets, cfg.range_bits)],
-                schema=schemas.CORPUS_STATS,
-            ),
-            paths.corpus_stats,
-        )
-        postings.unpersist()
-        postings_raw.unpersist()
-        terms_dim.unpersist()
-        doclen.unpersist()
-        wall = time.monotonic() - t0
-        return BuildResult(paths, n_docs, avgdl, wall, n_docs / wall)
-    # Materialize the numeric postings (and the FULL terms_dim — the
-    # head(1) above cached only its first partition) FROM the cached raw
+    # avg over zero docs is NULL; an empty corpus runs the same stages
+    # over zero rows and commits a well-formed empty index.
+    avgdl = float(stats_row["avgdl"] or 0.0)
+    # Materialize the numeric postings and terms_dim FROM the cached raw
     # triples BEFORE freeing them: the doclen collect materialized only
     # postings_raw itself, and `postings` (lazy persist) is otherwise
     # first computed by the segments write — after this unpersist, which
@@ -865,74 +885,18 @@ def build_index(
     segments = build_segments(postings, terms_dim, avgdl, epoch, cfg_run)
     write_table(segments, paths.segments, partition_by=["term_bucket"])
 
-    # E6/E10: dictionary + stats tables, derived from the COMMITTED
-    # segments so they can never drift from the written index. df is
-    # exact (approx_count_distinct would break rank-stability).
-    seg = read_engine_table(spark, paths.segments)
-    dictionary = derive_dictionary(seg)
-    stats_df = spark.createDataFrame(
-        [(n_docs, avgdl, epoch, cfg.analysis_version,
-          cfg.n_term_buckets, cfg.range_bits)],
-        schema=schemas.CORPUS_STATS,
+    # E6/E10/E13: dictionary, doclen, lineage (with the driver-measured
+    # wall clock through the segment commit), then corpus_stats.
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    seg = read_engine_table(spark, paths.segments, schemas.SEGMENTS)
+    commit_index(
+        spark,
+        paths,
+        doclen,
+        (n_docs, avgdl, epoch, cfg.analysis_version,
+         cfg.n_term_buckets, cfg.range_bits),
+        lineage=segment_lineage(seg, epoch, "build", wall_ms),
     )
-    # E13: per-partition lineage/metrics from the committed segments
-    # (input_rows = postings per bucket, bytes_out = blob bytes) + the
-    # driver-measured wall clock through the segment commit.
-    wall = time.monotonic() - t0
-    lineage = (
-        seg.groupBy("term_bucket")
-        .agg(
-            F.sum("n_docs").cast("long").alias("input_rows"),
-            F.count("*").cast("long").alias("output_rows"),
-            F.sum(
-                F.length("doc_bytes") + F.length("tf_bytes") + F.length("dl_bytes")
-            )
-            .cast("long")
-            .alias("bytes_out"),
-        )
-        .select(
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.lit("build").alias("stage"),
-            F.col("term_bucket").cast("int").alias("partition_id"),
-            "input_rows",
-            "output_rows",
-            "bytes_out",
-            F.lit(int(wall * 1000)).cast("long").alias("wall_ms"),
-            F.lit("done").alias("status"),
-        )
-    )
-    # Dictionary/doclen/lineage are independent of each other; submit
-    # them from driver threads (Spark schedules concurrent jobs fine)
-    # so their fixed per-job latencies overlap instead of summing.
-    # corpus_stats commits ALONE, strictly AFTER the other three: the
-    # serving tier's staleness token (query._index_signature) is the
-    # corpus_stats file listing, on the contract that every build/merge
-    # rewrites corpus_stats LAST — if it raced ahead here, a concurrent
-    # search() could cache a session built over a half-written
-    # dictionary under the final signature and serve it indefinitely.
-    # Spark job groups, descriptions and tags are thread-local:
-    # inheritable_thread_target copies the caller's into the pool
-    # threads, so the caller's job-group attribution covers these writes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    write = inheritable_thread_target(spark)(write_table)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(write, dictionary, paths.dictionary),
-            pool.submit(write, doclen, paths.doclen),
-            # overwrite, not append: a rebuild into a reused root fully
-            # replaces segments/dictionary/doclen (write_table pins
-            # static overwrite), so appending here would accumulate
-            # duplicate (epoch, 'build', partition_id) rows that every
-            # lineage consumer double-counts — the same stale-manifest
-            # class the merge path purges explicitly.
-            pool.submit(write, lineage, paths.lineage),
-        ]
-        for f in futs:
-            f.result()
-    write_table(stats_df, paths.corpus_stats)
     postings.unpersist()
     terms_dim.unpersist()
     doclen.unpersist()
@@ -993,11 +957,11 @@ def build_index_from_pages(
     paths = IndexPaths(index_root)
 
     if prior_docmap is None:
-        corpus, n_id_buckets = assign_dense_ids_resolved(prepared, "url", "doc_id")
+        corpus, n_id_buckets = assign_dense_ids(prepared, "url", "doc_id")
         base_offset = 0
         docmap = corpus.select("doc_id", "url", "warc_ts")
     else:
-        prior = spark.read.parquet(prior_docmap)
+        prior = read_engine_table(spark, prior_docmap, schemas.DOCMAP)
         prior_ids = prior.select("url", F.col("doc_id").alias("_prior_id"))
         joined = prepared.join(prior_ids, "url", "left")
         known = (
@@ -1013,7 +977,7 @@ def build_index_from_pages(
         # the carried doc_id 0 (latest-epoch-wins would then conflate
         # two different urls' postings).
         base_offset = (int(prior_max) if prior_max is not None else -1) + 1
-        fresh_ids, n_id_buckets = assign_dense_ids_resolved(fresh, "url", "doc_id")
+        fresh_ids, n_id_buckets = assign_dense_ids(fresh, "url", "doc_id")
         fresh_ids = fresh_ids.withColumn(
             "doc_id", (F.col("doc_id") + F.lit(base_offset)).cast("long")
         )

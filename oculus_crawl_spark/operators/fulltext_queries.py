@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..functions import bm25
 from ..functions.analysis import TOKENIZE_ORACLE_REGEX, tokenize
 from ..sources.tables import read_engine_table, read_table, table_signature
@@ -214,8 +215,10 @@ def _pages_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     the extraction chain reproduced every document (dup rows must carry
     the re-crawled ' updated' suffix -> dl+1)."""
     root = get_pages_index(spark, sf_dir)
-    docmap = read_engine_table(spark, f"{root}/docmap").select("doc_id", "url")
-    doclen = read_engine_table(spark, f"{root}/doclen")
+    docmap = read_engine_table(
+        spark, f"{root}/docmap", schemas.DOCMAP
+    ).select("doc_id", "url")
+    doclen = read_engine_table(spark, f"{root}/doclen", schemas.DOCLEN)
     return docmap.join(doclen, "doc_id").select("url", "dl").orderBy("url")
 
 
@@ -290,8 +293,12 @@ def _pages_docmap_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     space past the prior max (n_ids == n_map, max_id == n_map - 1)."""
     root0 = get_pages_index(spark, sf_dir)
     root1 = get_pages_epoch1_index(spark, sf_dir)
-    dm0 = read_engine_table(spark, f"{root0}/docmap").select("url", "doc_id")
-    dm1 = read_engine_table(spark, f"{root1}/docmap").select("url", "doc_id")
+    dm0 = read_engine_table(
+        spark, f"{root0}/docmap", schemas.DOCMAP
+    ).select("url", "doc_id")
+    dm1 = read_engine_table(
+        spark, f"{root1}/docmap", schemas.DOCMAP
+    ).select("url", "doc_id")
     a0 = dm0.agg(F.count("*").alias("n_prior"))
     a1 = dm1.agg(
         F.count("*").alias("n_map"),
@@ -323,7 +330,7 @@ def _pages_docmap_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """docID assignment invariant: ids are DENSE 0..n-1 with no
     collisions (SURVEY §7.4 — hash ids collide at 10^12 urls)."""
     root = get_pages_index(spark, sf_dir)
-    dm = read_engine_table(spark, f"{root}/docmap")
+    dm = read_engine_table(spark, f"{root}/docmap", schemas.DOCMAP)
     return dm.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("doc_id").alias("n_ids"),
@@ -379,7 +386,9 @@ def _pages_merged_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     mroot = get_pages_merged_index(spark, sf_dir)
     root1 = get_pages_epoch1_index(spark, sf_dir)
     n_docs = read_table(spark, sf_dir, "documents").count()
-    url_of = read_engine_table(spark, f"{root1}/docmap").select("doc_id", "url")
+    url_of = read_engine_table(
+        spark, f"{root1}/docmap", schemas.DOCMAP
+    ).select("doc_id", "url")
     out = search(spark, mroot, ["dup again"], k=2 * n_docs).join(
         url_of, "doc_id"
     )
@@ -539,7 +548,7 @@ FROM scores
 def _lineage(spark: SparkSession, root: str, stage: str) -> DataFrame:
     """E13 lineage totals for one stage: postings in, blocks out."""
     return (
-        read_engine_table(spark, f"{root}/lineage_metrics")
+        read_engine_table(spark, f"{root}/lineage_metrics", schemas.LINEAGE_METRICS)
         .filter(F.col("stage") == stage)
         .groupBy("epoch", "stage")
         .agg(
@@ -582,7 +591,7 @@ def _term_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the real index)."""
     root = get_index(spark, sf_dir)
     return (
-        read_engine_table(spark, f"{root}/dictionary")
+        read_engine_table(spark, f"{root}/dictionary", schemas.DICTIONARY)
         .select("term", "df", "cf")
         .orderBy("term")
     )
@@ -603,7 +612,9 @@ FROM tf GROUP BY term ORDER BY term
 def _doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4: per-document token counts from the engine's doclen table."""
     root = get_index(spark, sf_dir)
-    return read_engine_table(spark, f"{root}/doclen").select("doc_id", "dl")
+    return read_engine_table(spark, f"{root}/doclen", schemas.DOCLEN).select(
+        "doc_id", "dl"
+    )
 
 
 # LEFT JOIN from documents, not GROUP BY over unnested tokens: the
@@ -622,7 +633,9 @@ LEFT JOIN (SELECT doc_id, count(*) AS dl
 
 def _corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = get_index(spark, sf_dir)
-    return read_engine_table(spark, f"{root}/corpus_stats").select(
+    return read_engine_table(
+        spark, f"{root}/corpus_stats", schemas.CORPUS_STATS
+    ).select(
         "n_docs", F.round("avgdl", 6).alias("avgdl")
     )
 

@@ -23,8 +23,11 @@ The manifest append happens strictly AFTER the wave's data commit, so a
 crash at any point loses at most one wave; on rerun, buckets whose
 manifest row exists are skipped (driver-side anti-join — the bucket list
 is tiny) and the interrupted wave's partial partitions are idempotently
-overwritten. Finalization (dictionary/doclen/corpus_stats derived from
-the committed merged segments) is a pure overwrite, safe to repeat.
+overwritten. Finalization is the build's own commit routine,
+``build.commit_index``: dictionary derived from the committed merged
+segments, doclen, then corpus_stats strictly last — pure overwrites,
+safe to repeat. Every input and output table is read with its declared
+schema (schemas.py), so all-empty inputs merge through the same path.
 
 Merge semantics
 ---------------
@@ -61,22 +64,9 @@ the blast radius of a failure and give the manifest its checkpoint
 granularity. At 10^12 docs: thousands of term buckets, waves sized so
 one wave ~ one cluster-full of tasks.
 
-Catalog note: unlike the build (sources/tables.py shim), the merge's
-writes are deliberately RAW parquet in this sandbox — its checkpoint
-semantics hang on dynamic partition overwrite, whose Iceberg equivalent
-is ``overwritePartitions()`` / ``replaceWhere`` on the v2 writer, plus
-real positional deletes instead of the tombstones table. Flipping the
-merge to a live catalog therefore changes these call sites (the wave
-overwrite, the tombstone write, the finalize overwrites, the
-untrusted-root purge — an Iceberg ``TRUNCATE``/``replace`` of the
-segments and lineage tables — the pyarrow tombstone reads in
-``_load_tombstones``, and the INPUT-index reads of segments/
-corpus_stats/doclen/lineage/marker, which become catalog
-``spark.read.table`` like build/query's ``read_engine_table``) as a
-unit; none of it
-is executable here (no Iceberg jars, no network — SURVEY §7.6), so the
-parquet path stays the tested truth rather than shipping an
-unexecutable branch.
+Catalog sessions are refused: the merge's checkpoint semantics hang on
+raw parquet dynamic partition overwrite, while a catalog-configured
+build writes Iceberg tables that the merge would never read or replace.
 """
 
 from __future__ import annotations
@@ -93,12 +83,14 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..config import DEFAULT, IndexConfig
 from ..functions.codec import decode_doc_ids_many, pfor_decode_many
+from ..sources.tables import _iceberg_catalog, read_engine_table
 from .build import (
     IndexPaths,
     _run_starts,
-    derive_dictionary,
+    commit_index,
     index_geometry,
     reblock,
+    segment_lineage,
 )
 
 
@@ -248,7 +240,7 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
 def _read_done_buckets(spark: SparkSession, paths: IndexPaths, epoch: int) -> set[int]:
     try:
         rows = (
-            spark.read.parquet(paths.lineage)
+            read_engine_table(spark, paths.lineage, schemas.LINEAGE_METRICS)
             .filter(
                 (F.col("stage") == "merge")
                 & (F.col("status") == "done")
@@ -289,7 +281,9 @@ def _doclen_and_tombstones(
     parts = []
     for p, ep in zip(inputs, epochs):
         parts.append(
-            spark.read.parquet(p.doclen).withColumn("epoch", F.lit(ep).cast("long"))
+            read_engine_table(spark, p.doclen, schemas.DOCLEN).withColumn(
+                "epoch", F.lit(ep).cast("long")
+            )
         )
     union = parts[0]
     for d in parts[1:]:
@@ -317,13 +311,24 @@ def merge_indexes(
 
     ``resume=True`` skips term buckets whose manifest row already exists
     (the checkpoint-resume contract); ``fail_after_waves`` injects a
-    crash after that many committed waves (tests only)."""
+    crash after that many committed waves (tests only). Refused on a
+    session with an Iceberg catalog configured: see the module
+    docstring."""
+    if _iceberg_catalog(spark) is not None:
+        raise ValueError(
+            "merge_indexes reads and writes raw parquet and cannot merge "
+            "indexes a catalog-configured session wrote as Iceberg tables; "
+            "run the merge on a session without an Iceberg catalog"
+        )
     t0 = time.monotonic()
     inputs = [IndexPaths(r) for r in input_roots]
     out = IndexPaths(out_root)
 
     # Refuse to merge indexes built with different frozen analyzers.
-    stats = [spark.read.parquet(p.corpus_stats).collect()[0] for p in inputs]
+    stats = [
+        read_engine_table(spark, p.corpus_stats, schemas.CORPUS_STATS).collect()[0]
+        for p in inputs
+    ]
     versions = {s["analysis_version"] for s in stats}
     if len(versions) != 1:
         raise ValueError(f"mixed analysis versions: {sorted(versions)}")
@@ -389,7 +394,9 @@ def merge_indexes(
                 # raises the same exception class as a torn file, and a
                 # false "torn" verdict costs a full (correct, purged)
                 # re-merge of a possibly-committed index.
-                rows = spark.read.parquet(marker_path).collect()
+                rows = read_engine_table(
+                    spark, marker_path, schemas.MERGE_INPUTS
+                ).collect()
                 prev = rows[0]["inputs_sig"] if rows else None
                 break
             except AnalysisException:
@@ -500,7 +507,9 @@ def merge_indexes(
         "partitionOverwriteMode", "static"
     ).partitionBy("range_bucket").parquet(out.tombstones)
 
-    seg_inputs = [spark.read.parquet(p.segments) for p in inputs]
+    seg_inputs = [
+        read_engine_table(spark, p.segments, schemas.SEGMENTS) for p in inputs
+    ]
     all_buckets = sorted({
         int(r["term_bucket"])
         for df in seg_inputs
@@ -532,34 +541,10 @@ def merge_indexes(
         ).partitionBy("term_bucket").parquet(out.segments)
 
         wall_ms = int((time.monotonic() - tw) * 1000)
-        # Explicit schema: a wave whose every bucket produced zero
-        # blocks leaves a part-less directory that schema inference
-        # cannot read (build.py's empty-index path documents the same).
-        wave_seg = spark.read.schema(schemas.SEGMENTS).parquet(out.segments).filter(
+        wave_seg = read_engine_table(spark, out.segments, schemas.SEGMENTS).filter(
             F.col("term_bucket").isin(wave)
         )
-        manifest = (
-            wave_seg.groupBy("term_bucket")
-            .agg(
-                F.sum("n_docs").cast("long").alias("input_rows"),
-                F.count("*").cast("long").alias("output_rows"),
-                F.sum(
-                    F.length("doc_bytes") + F.length("tf_bytes") + F.length("dl_bytes")
-                )
-                .cast("long")
-                .alias("bytes_out"),
-            )
-            .select(
-                F.lit(epoch_out).cast("long").alias("epoch"),
-                F.lit("merge").alias("stage"),
-                F.col("term_bucket").cast("int").alias("partition_id"),
-                "input_rows",
-                "output_rows",
-                "bytes_out",
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit("done").alias("status"),
-            )
-        )
+        manifest = segment_lineage(wave_seg, epoch_out, "merge", wall_ms)
         # Manifest row for a bucket with zero output blocks (possible if
         # no input had the bucket): emit an explicit empty-done row so
         # resume still skips it.
@@ -581,27 +566,20 @@ def merge_indexes(
             ranked.unpersist()
             raise MergeInterrupted(f"injected failure after wave {wi + 1}")
 
-    # All inputs segment-less (every doc deleted / zero-doc epochs):
-    # no wave ever ran, so on a fresh root the segments table does not
-    # exist — commit an explicit empty one (non-partitioned, schema in
-    # the part file, mirroring build.py's empty-index path) so finalize
-    # and serving can read the root.
+    # All inputs segment-less (every doc deleted / zero-doc epochs): no
+    # wave ran, so on a fresh root the segments table does not exist yet.
     if not _fs_exists(spark, out.segments):
-        spark.createDataFrame([], schemas.SEGMENTS).write.mode(
-            "overwrite"
+        spark.createDataFrame([], schemas.SEGMENTS).write.partitionBy(
+            "term_bucket"
         ).parquet(out.segments)
-
-    # Finalize (idempotent overwrites) from the COMMITTED merged segments.
-    seg = spark.read.schema(schemas.SEGMENTS).parquet(out.segments)
-    dictionary = derive_dictionary(seg)
-    dictionary.write.mode("overwrite").parquet(out.dictionary)
-    doclen.write.mode("overwrite").parquet(out.doclen)
+    commit_index(
+        spark,
+        out,
+        doclen,
+        (n_docs, avgdl, epoch_out, stats[0]["analysis_version"],
+         n_term_buckets, range_bits),
+    )
     ranked.unpersist()
-    spark.createDataFrame(
-        [(n_docs, avgdl, epoch_out, stats[0]["analysis_version"],
-          n_term_buckets, range_bits)],
-        schema=schemas.CORPUS_STATS,
-    ).write.mode("overwrite").parquet(out.corpus_stats)
 
     return MergeResult(
         paths=out,

@@ -58,6 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..config import DEFAULT, IndexConfig
 from ..functions import bm25
 from ..functions.analysis import tokenize
@@ -450,14 +451,20 @@ class SearchSession:
         # read_engine_table, not read.parquet: build_index writes these
         # through the Iceberg-or-Parquet shim, and a session configured
         # for the catalog backend has no parquet files at these paths —
-        # the serving tier must mirror the writer's backend choice
-        # (build.py's own prior-index reader already does).
-        stats = read_engine_table(spark, self.paths.corpus_stats).collect()[0]
+        # the serving tier must mirror the writer's backend choice. The
+        # declared schemas spare one inference job per table.
+        stats = read_engine_table(
+            spark, self.paths.corpus_stats, schemas.CORPUS_STATS
+        ).collect()[0]
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
         self.epoch = int(stats["epoch"])
-        self._dictionary = read_engine_table(spark, self.paths.dictionary)
-        seg = read_engine_table(spark, self.paths.segments).select(*_SEG_COLS)
+        self._dictionary = read_engine_table(
+            spark, self.paths.dictionary, schemas.DICTIONARY
+        )
+        seg = read_engine_table(
+            spark, self.paths.segments, schemas.SEGMENTS
+        ).select(*_SEG_COLS)
         # Ranges actually present (auto gather switch + partition sizing):
         # dense doc_ids make this exact.
         # Stored geometry wins over the caller's cfg — a session opened

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..sources.tables import read_engine_table, read_table, table_signature
 
 K = 5
@@ -254,7 +255,9 @@ def ivf_topk_indexed(
     # writer's backend choice (same asymmetry class SearchSession fixed
     # for corpus_stats/dictionary/segments).
     cent = sorted(
-        read_engine_table(spark, f"{index_path}/centroids").collect(),
+        read_engine_table(
+            spark, f"{index_path}/centroids", schemas.IVF_CENTROIDS
+        ).collect(),
         key=lambda r: r["cell"],
     )
     C = np.array([r["centroid"] for r in cent], dtype=np.float64)
@@ -278,15 +281,17 @@ def ivf_topk_indexed(
     probe_cells = spark.createDataFrame(routes, "q_id long, cell int")
     cells_needed = sorted({c for _, c in routes})
     base = (
-        read_engine_table(spark, f"{index_path}/assignments")
+        read_engine_table(spark, f"{index_path}/assignments", schemas.IVF_ASSIGNMENTS)
         .filter(F.col("cell").isin(cells_needed))  # -> PartitionFilters
         .select(
             "cell",
             F.col("vec_id").alias("n_id"),
             F.col("embedding").alias("n_emb"),
             # Stored at write time (ivf_build) — never recomputed per
-            # probe query over the scanned cells.
-            F.col("nrm").alias("n_norm"),
+            # probe query over the scanned cells. An index written
+            # before norms were stored reads nrm as NULL; its norms are
+            # computed here by the same expression.
+            F.coalesce(F.col("nrm"), _norm(F.col("embedding"))).alias("n_norm"),
         )
     )
     q = probes.select(

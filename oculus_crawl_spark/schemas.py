@@ -3,6 +3,10 @@
 Schema-on-read inference is banned in the engine: inference samples and
 is therefore nondeterministic, and determinism is a hard requirement
 (BASELINE.json:15 byte-identical extraction, rank-identical top-k).
+Every engine read passes its table's schema to
+``sources.tables.read_engine_table``: a declared-schema parquet read
+starts no inference job, and an empty partitioned table (a directory
+without data files) reads as 0 rows.
 """
 
 from __future__ import annotations
@@ -104,6 +108,28 @@ LINEAGE_METRICS = T.StructType(
         T.StructField("bytes_out", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("status", T.StringType(), False),
+    ]
+)
+
+# Resumable-merge marker: the input set an out_root's manifest belongs to.
+MERGE_INPUTS = T.StructType([T.StructField("inputs_sig", T.StringType(), False)])
+
+# IVF index (operators/similarity.py). ``assignments`` is partitioned by
+# cell; ``nrm`` (the stored vector norm) is absent from indexes written
+# before it was stored and then reads as NULL.
+IVF_ASSIGNMENTS = T.StructType(
+    [
+        T.StructField("vec_id", T.LongType(), False),
+        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+        T.StructField("nrm", T.DoubleType(), True),
+        T.StructField("cell", T.IntegerType(), False),
+    ]
+)
+
+IVF_CENTROIDS = T.StructType(
+    [
+        T.StructField("cell", T.IntegerType(), False),
+        T.StructField("centroid", T.ArrayType(T.DoubleType()), True),
     ]
 )
 

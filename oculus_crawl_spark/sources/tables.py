@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -212,9 +213,18 @@ def write_table(
     writer.parquet(path)
 
 
-def read_engine_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a table written by write_table (either backend)."""
+def read_engine_table(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame:
+    """Read back a table written by write_table (either backend).
+
+    The parquet branch reads with the table's declared ``schema``
+    (schemas.py): no inference job, and an empty partitioned table (a
+    directory with no data files) reads as 0 rows instead of failing
+    with UNABLE_TO_INFER_SCHEMA. Partition columns found on disk come
+    last, as with inference. A column the files lack reads as NULL. The Iceberg
+    branch ignores ``schema``: catalog tables carry their own."""
     catalog = _iceberg_catalog(spark)
     if catalog is not None:
         return spark.read.table(f"{catalog}.{path.strip('/').replace('/', '.')}")
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)

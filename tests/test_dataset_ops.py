@@ -381,6 +381,29 @@ def test_ivf_indexed_path_matches_inmemory_and_prunes(spark, tmp_path):
     assert "cell" in plan.split("PartitionFilters")[1][:250]
 
 
+def test_ivf_probe_reads_index_without_stored_norms(spark, tmp_path):
+    """An IVF index written before per-vector norms were stored has no
+    ``nrm`` column. Read with the declared schema it arrives as NULL,
+    and the probe computes those norms itself: its rows equal the rows
+    of the same index written with norms."""
+    from oculus_crawl_spark.sources.tables import write_table
+
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    probes = emb.filter(F.col("vec_id") < 10)
+    assignments, centroids = similarity.ivf_build(emb, n_cells=10)
+    for name, table in (("fresh", assignments), ("old", assignments.drop("nrm"))):
+        write_table(table, str(tmp_path / name / "assignments"), ["cell"])
+        write_table(centroids, str(tmp_path / name / "centroids"))
+    assert "nrm" not in spark.read.parquet(str(tmp_path / "old" / "assignments")).columns
+    fresh, old = (
+        sorted(map(tuple, similarity.ivf_topk_indexed(
+            spark, str(tmp_path / name), probes, nprobe=3
+        ).collect()))
+        for name in ("fresh", "old")
+    )
+    assert fresh and old == fresh
+
+
 def test_ivf_derived_sizing():
     assert similarity.derive_n_cells(500) == 22
     assert similarity.derive_n_cells(10**12) == 65536

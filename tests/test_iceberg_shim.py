@@ -55,15 +55,44 @@ def test_write_table_iceberg_call_shape(spark, monkeypatch):
 
 
 def test_read_engine_table_iceberg_call_shape(spark, monkeypatch):
+    """Catalog tables carry their own schema: the declared one must not
+    reach ``spark.read.table`` (nor a ``.schema(...)`` before it)."""
+    from oculus_crawl_spark import schemas
+
     log: dict = {}
     monkeypatch.setattr(tables, "_iceberg_catalog", lambda s: "ice")
     monkeypatch.setattr(
         type(spark.read),
         "table",
-        lambda self, name: log.setdefault("table", name),
+        lambda self, *args, **kwargs: log.update(args=args, kwargs=kwargs),
     )
-    tables.read_engine_table(spark, "/idx/gen1/segments")
-    assert log["table"] == "ice.idx.gen1.segments"
+    monkeypatch.setattr(
+        type(spark.read),
+        "schema",
+        lambda self, *a, **k: log.setdefault("schema_called", True),
+    )
+    tables.read_engine_table(spark, "/idx/gen1/segments", schemas.SEGMENTS)
+    assert log["args"] == ("ice.idx.gen1.segments",)
+    assert log["kwargs"] == {}
+    assert "schema_called" not in log
+
+
+def test_merge_refuses_catalog_session(spark, monkeypatch):
+    """A catalog-configured build writes Iceberg tables, but the merge
+    reads and writes raw parquet: it would merge whatever stale parquet
+    sits at the roots and serving would never see its output. Refused
+    before anything is read or written."""
+    import pytest
+
+    from oculus_crawl_spark.operators import merge
+
+    monkeypatch.setattr(merge, "_iceberg_catalog", lambda s: "ice")
+    monkeypatch.setattr(
+        merge, "read_engine_table",
+        lambda *a, **k: pytest.fail("merge read a table on a catalog session"),
+    )
+    with pytest.raises(ValueError, match="catalog"):
+        merge.merge_indexes(spark, ["/idx/gen0", "/idx/gen1"], "/idx/merged")
 
 
 def test_iceberg_catalog_probe_ignores_subkeys():

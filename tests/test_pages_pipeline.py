@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from oculus_crawl_spark import schemas
 from oculus_crawl_spark.functions.analysis import extract_text, wrap_html
 from oculus_crawl_spark.operators.build import (
-    assign_doc_ids,
+    assign_dense_ids,
     build_index_from_pages,
     prepare_pages,
 )
@@ -81,8 +81,8 @@ def test_prepare_pages_lang_filter(spark):
 def test_assign_doc_ids_dense_and_deterministic(spark):
     pages = _pages_df(spark, with_dups=False)
     prepared = prepare_pages(pages)
-    a = assign_doc_ids(prepared).select("url", "doc_id").collect()
-    b = assign_doc_ids(prepared).select("url", "doc_id").collect()
+    a = assign_dense_ids(prepared, "url", "doc_id")[0].select("url", "doc_id").collect()
+    b = assign_dense_ids(prepared, "url", "doc_id")[0].select("url", "doc_id").collect()
     ids_a = sorted(r["doc_id"] for r in a)
     assert ids_a == list(range(len(a)))  # dense 0..n-1
     assert {(r["url"], r["doc_id"]) for r in a} == {
@@ -95,20 +95,22 @@ def test_assign_dense_ids_any_partition_count(spark):
     numbering (the numberings themselves may differ — the count is
     pinned per index generation); the derived power-of-two path must
     match the explicit path for the same effective count."""
-    from oculus_crawl_spark.operators.build import assign_dense_ids
-
     keys = spark.createDataFrame(
         [(f"url-{i:05d}",) for i in range(997)], "url string"
     )
     base = None
     for n in (1, 7, 32, 64):
-        got = assign_dense_ids(keys, "url", "doc_id", n_partitions=n).collect()
+        out, resolved = assign_dense_ids(keys, "url", "doc_id", n_partitions=n)
+        assert resolved == n
+        got = out.collect()
         ids = sorted(r["doc_id"] for r in got)
         assert ids == list(range(997)), n
         assert len({r["url"] for r in got}) == 997
         if n == 32:
             base = sorted((r["url"], r["doc_id"]) for r in got)
-    derived = assign_dense_ids(keys, "url", "doc_id").collect()  # auto -> 32
+    derived, resolved = assign_dense_ids(keys, "url", "doc_id")
+    assert resolved == 32  # the derived count for 997 keys
+    derived = derived.collect()
     assert sorted((r["url"], r["doc_id"]) for r in derived) == base
 
 
