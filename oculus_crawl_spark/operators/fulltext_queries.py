@@ -134,8 +134,8 @@ def _rerank_rounded(
     orders on the rounded value — the whole point of the helper.
 
     GRADING SURFACE ONLY: the input is ``search()``'s already-merged
-    result (<= queries*k rows — the serving path bounds and merges in
-    query.py with its own partitioned/auto-switched gather), so the
+    result (<= queries*k rows — the serving path cuts to k per partition
+    and merges at the coordinator in query.py), so the
     unpartitioned single-task window here re-ranks a driver-sized
     frame, it is not the scale path. The full-corpus-k entries
     (k = n_docs) are a grading shape by construction — a real serving

@@ -9,27 +9,33 @@
      with per-block max-score skipping over lazily-decompressed posting
      blocks, vectorized in NumPy inside mapInPandas
   Q5 Okapi BM25 k1=1.2 b=0.75 (functions/bm25 — one frozen formula)
-  Q6 global top-k merge of the per-range top-k rows (tiny)
+  Q6 global top-k merge: each partition cuts its ranges' lists to k rows
+     per query, and the coordinator merges the <= partitions*queries*k
+     rows it collects as Arrow with one NumPy lexsort
   Q7 rank assignment, pinned tie-break (score DESC, doc_id ASC)
 
 Scale story: the index is document-range partitioned (blocks never cross
 a range_bucket), so Q4 runs one independent exact WAND per (query,
 range) — 10^12 docs = ~1M ranges fanned out across executors, each
-seeing only its range's blocks. Per-range top-k lists (<= k rows each)
-are then globally merged — a classic document-partitioned search tier
-expressed as two DataFrame ops.
+seeing only its range's blocks. A partition holds many ranges, and the
+kernel keeps only the k best rows per (partition, query) over all of
+them; partitions are capped at the core count, so the final merge is
+within a core-count factor of the queries*k result the caller collects
+anyway, at any corpus size — a classic document-partitioned search tier
+(cut to k inside each partition, then one small global merge).
 
 One kernel shape: every session holds ONE relation, the segments
 repartitioned by range_bucket, and every query batch runs
 filter(term_bucket IN buckets AND term IN terms) -> mapInPandas(WAND)
--> gather over it. The per-term (query_id, idf) plan rides in the
+-> merge over it. The per-term (query_id, idf) plan rides in the
 kernel closure, so no join ever touches the blocks; hash partitioning
 puts every block of one range_bucket in one partition, so each
 (query, range) WAND in a partition is exact.
 
 * Resident session (``cache_segments=True``, the default): the relation
   is persisted, so its one shuffle is paid at session open and a query
-  batch is ONE narrow stage: cached-scan filter -> mapInPandas -> gather.
+  batch is ONE narrow stage: cached-scan filter -> mapInPandas, then
+  the coordinator merge.
   This is how a serving tier works: the shard layout is fixed at load
   time, queries are routed to it.
 * Uncached session (one-shot querying, or segments too large to hold
@@ -55,6 +61,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -181,20 +188,15 @@ class _TermBlocks:
             tfs, _tl = pfor_decode_many(list(self.tf_bytes[miss]))
             dls, _ll = pfor_decode_many(list(self.dl_bytes[miss]))
             self.decoded_blocks += len(miss)
-            if len(miss) == len(idxs):
-                # fast path: the whole request was decoded contiguously —
-                # store block views for future mixed sets, return as-is.
-                offs = np.concatenate(([0], np.cumsum(dl_)))
-                for j, i in enumerate(miss.tolist()):
-                    sl = slice(int(offs[j]), int(offs[j + 1]))
-                    cache[i] = (docs[sl], tfs[sl], dls[sl])
-                out = (docs, tfs, dls)
-                self._concat[key] = out
-                return out
             offs = np.concatenate(([0], np.cumsum(dl_)))
             for j, i in enumerate(miss.tolist()):
                 sl = slice(int(offs[j]), int(offs[j + 1]))
                 cache[i] = (docs[sl], tfs[sl], dls[sl])
+            if len(miss) == len(idxs):
+                # The whole request was decoded contiguously: return as-is.
+                out = (docs, tfs, dls)
+                self._concat[key] = out
+                return out
         parts = [cache[i] for i in idxs.tolist()]
         out = (
             np.concatenate([p[0] for p in parts]),
@@ -336,10 +338,34 @@ def _bmw_topk(
 # --- the Spark surface --------------------------------------------------------
 
 
+# The kernel frame. blocks_total/blocks_decoded are additive: each
+# (partition, query)'s counters ride on its rank-1 row and are 0 on the
+# others, so summing a query's rows gives its totals over all ranges.
 _WAND_SCHEMA = (
     "query_id int, doc_id long, score double, "
     "blocks_total long, blocks_decoded long"
 )
+_RESULT_SCHEMA = "query_id int, rank int, doc_id long, score double"
+_COUNTERS = ("blocks_total", "blocks_decoded")
+
+
+def _top_k_rows(
+    qid: np.ndarray, doc: np.ndarray, score: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Indices of each query's k best rows under the pinned tie-break
+    (score DESC, doc_id ASC), ordered by (query_id, rank), and their
+    ranks. One lexsort; the kernel's per-partition cut and the
+    coordinator's global merge both rank through it."""
+    order = np.lexsort((doc, -score, qid))
+    q = qid[order]
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    starts = np.flatnonzero(first)
+    rank = np.arange(1, len(q) + 1) - np.repeat(
+        starts, np.diff(np.append(starts, len(q)))
+    )
+    keep = rank <= k
+    return order[keep], rank[keep]
 
 
 def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, avgdl: float):
@@ -347,17 +373,17 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
     partition. ``plan`` = [(query_id, {term: idf})] travels in the
     closure (bytes-tiny), so no join ever touches the blocks. Blocks of
     one range_bucket are guaranteed co-partitioned (the session's
-    repartition), so each (query, range) WAND here is exact."""
+    repartition), so each (query, range) WAND here is exact, and so is
+    the partition's top-k per query over all its ranges — the only rows
+    it emits."""
 
     def run(batches):
         parts = [p for p in batches if len(p)]
         if not parts:
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        out = {
-            "query_id": [], "doc_id": [], "score": [],
-            "blocks_total": [], "blocks_decoded": [],
-        }
+        qids, docs, scores = [], [], []
+        counters: dict[int, list[int]] = {}
         for rb, grb in pdf.groupby("range_bucket", sort=False):
             term_groups = dict(tuple(grb.groupby("term", sort=True)))
             # One _TermBlocks per (range, term), shared across the whole
@@ -378,32 +404,31 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
                 if not terms:
                     continue
                 # decoded_blocks accumulates across the whole query batch
-                # (the _TermBlocks are shared per (range, term)); report
+                # (the _TermBlocks are shared per (range, term)); count
                 # this query's decode work as the delta, so a later query
                 # can never report more decodes than blocks (it reports
                 # 0 when the batch cache was already warm).
                 before = sum(t.decoded_blocks for t in terms)
-                docs, scores = _bmw_topk(terms, k, avgdl)
-                n = len(docs)
-                if n == 0:
-                    continue
-                total = int(sum(len(t.first) for t in terms))
-                decoded = int(sum(t.decoded_blocks for t in terms) - before)
-                out["query_id"].extend([qid] * n)
-                out["doc_id"].extend(docs.astype(np.int64).tolist())
-                out["score"].extend(scores.tolist())
-                out["blocks_total"].extend([total] * n)
-                out["blocks_decoded"].extend([decoded] * n)
-        if out["query_id"]:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out["query_id"], dtype=np.int32),
-                    "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
-                    "score": np.asarray(out["score"], dtype=np.float64),
-                    "blocks_total": np.asarray(out["blocks_total"], dtype=np.int64),
-                    "blocks_decoded": np.asarray(out["blocks_decoded"], dtype=np.int64),
-                }
-            )
+                d, sc = _bmw_topk(terms, k, avgdl)
+                c = counters.setdefault(qid, [0, 0])
+                c[0] += int(sum(len(t.first) for t in terms))
+                c[1] += int(sum(t.decoded_blocks for t in terms) - before)
+                qids.append(np.full(len(d), qid, dtype=np.int32))
+                docs.append(d.astype(np.int64))
+                scores.append(sc)
+        if not qids:
+            return
+        qid, doc, score = (np.concatenate(a) for a in (qids, docs, scores))
+        sel, rank = _top_k_rows(qid, doc, score, k)
+        out = pd.DataFrame(
+            {"query_id": qid[sel], "doc_id": doc[sel], "score": score[sel]}
+        )
+        lead = qid[sel][rank == 1]
+        for j, name in enumerate(_COUNTERS):
+            col = np.zeros(len(sel), dtype=np.int64)
+            col[rank == 1] = [counters[q][j] for q in lead.tolist()]
+            out[name] = col
+        yield out
 
     return run
 
@@ -413,10 +438,6 @@ _SEG_COLS = [
     "n_docs", "block_max_tf_norm", "doc_bytes", "tf_bytes", "dl_bytes",
 ]
 
-# Above this many (range, query, k) result rows the global merge stays
-# distributed (gather='spark') instead of collecting to the coordinator.
-GATHER_SPARK_THRESHOLD = 200_000
-
 
 class SearchSession:
     """A query tier over one built index.
@@ -425,8 +446,8 @@ class SearchSession:
     dictionary (bounded by ``max_resident_terms``), and the segments
     relation PARTITIONED BY ``range_bucket``, persisted when
     ``cache_segments=True`` — so a query batch is ONE Spark job over
-    the same kernel either way: filter -> mapInPandas WAND -> gather.
-    A resident session's job is one narrow stage over the cache; an
+    the same kernel either way: filter -> mapInPandas WAND, then one
+    Arrow merge at the coordinator. A resident session's job is one narrow stage over the cache; an
     uncached session (one-shot querying, or segments too large to hold
     resident) adds one exchange of the term-filtered blocks per batch.
     Sessions on one root share the persisted relation (an uncached one
@@ -465,16 +486,15 @@ class SearchSession:
         seg = read_engine_table(
             spark, self.paths.segments, schemas.SEGMENTS
         ).select(*_SEG_COLS)
-        # Ranges actually present (auto gather switch + partition sizing):
-        # dense doc_ids make this exact.
+        # Ranges actually present (partition sizing): dense doc_ids make
+        # this exact.
         # Stored geometry wins over the caller's cfg — a session opened
-        # with a different range_bits would mis-size the cached layout
-        # and the gather auto-switch. Pre-geometry indexes are refused
+        # with a different range_bits would mis-size the cached layout.
+        # Pre-geometry indexes are refused
         # here exactly like merge_indexes refuses them (index_geometry
         # raises): one surface silently falling back to cfg while the
         # other hard-fails was an inconsistent contract.
-        range_bits = index_geometry(stats)[1]
-        self.n_ranges_est = (self.n_docs >> range_bits) + 1
+        n_ranges = (self.n_docs >> index_geometry(stats)[1]) + 1
         # Co-partition blocks by their doc range: every (query, range)
         # WAND is then complete within one partition. A resident session
         # pays this shuffle ONCE at open and keeps the blocks hot; an
@@ -487,8 +507,7 @@ class SearchSession:
         # at 2.14 s; cap=cores runs one wave at 0.44 s). Ranges are
         # near-uniform by construction (dense doc ids, fixed range
         # width), so wave-smoothing oversubscription buys nothing.
-        n_parts = max(1, min(self.n_ranges_est,
-                             spark.sparkContext.defaultParallelism))
+        n_parts = max(1, min(n_ranges, spark.sparkContext.defaultParallelism))
         self._segments = seg.repartition(n_parts, "range_bucket")
         self._hold = None
         root = self.paths.root.rstrip("/")
@@ -555,28 +574,52 @@ class SearchSession:
         queries: list[str] | list[list[str]],
         k: int = 10,
         with_metrics: bool = False,
-        gather: str = "auto",
     ) -> DataFrame:
-        """gather='driver': per-range top-k lists (<= ranges*queries*k
-        tiny rows) are collected and merged at the coordinator — the
-        standard scatter-gather search-tier shape. gather='spark': the
-        merge stays distributed (window + filter). gather='auto'
-        (default) picks 'spark' once ranges*queries*k exceeds
-        GATHER_SPARK_THRESHOLD — at 10^12 docs with 2^20-doc ranges a
-        driver gather would pull ~1M rows per query, so the switch is
-        load-bearing, not cosmetic. Both gathers, cached or not,
-        produce identical rows (pinned tie-break)."""
-        spark = self.spark
+        """BM25 top-k per query: DataFrame(query_id, rank, doc_id, score),
+        plus the query's blocks_total and blocks_decoded over all ranges
+        when ``with_metrics``.
 
-        empty_schema = "query_id int, rank int, doc_id long, score double"
+        Q6/Q7, the coordinator merge: the kernel frame holds at most k
+        rows per (partition, query), <= partitions*queries*k rows with
+        partitions capped at the core count. It is collected as Arrow,
+        ranked with one lexsort under the pinned tie-break, cut to k per
+        query and handed back through createDataFrame's Arrow path.
+        Cached and uncached sessions produce identical rows."""
+        schema = _RESULT_SCHEMA
         if with_metrics:
-            empty_schema += ", blocks_total long, blocks_decoded long"
+            schema += ", blocks_total long, blocks_decoded long"
+        kernel = self._kernel_frame(queries, k)
+        if kernel is None:
+            return self.spark.createDataFrame([], schema)
+        t = kernel.toArrow()
+        qid, doc, score = (
+            t.column(c).to_numpy() for c in ("query_id", "doc_id", "score")
+        )
+        sel, rank = _top_k_rows(qid, doc, score, k)
+        cols = {
+            "query_id": qid[sel],
+            "rank": rank.astype(np.int32),
+            "doc_id": doc[sel],
+            "score": score[sel],
+        }
+        if with_metrics:
+            for name in _COUNTERS:
+                per_q = np.bincount(qid, weights=t.column(name).to_numpy())
+                cols[name] = per_q.astype(np.int64)[qid[sel]]
+        return self.spark.createDataFrame(pa.table(cols), schema)
+
+    def _kernel_frame(
+        self, queries: list[str] | list[list[str]], k: int
+    ) -> DataFrame | None:
+        """The lazy per-partition top-k frame (``_WAND_SCHEMA``) that
+        ``search`` merges, or None when nothing can match. Its plan is
+        the query's physical shape: filter -> MapInPandas, no join."""
         # k=0 is a valid "no results requested" batch, not an error: the
         # WAND kernel's argpartition(k-1) theta seed and zero-size score
         # reductions assume k >= 1, so guard here instead of crashing in
         # every executor task.
         if k <= 0:
-            return spark.createDataFrame([], empty_schema)
+            return None
 
         # Q1: tokenize queries with the SAME frozen analyzer as the corpus.
         qterms: list[tuple[int, str]] = []
@@ -587,24 +630,19 @@ class SearchSession:
                 else [t for s in q for t in tokenize(s)]
             )
             qterms.extend((qid, t) for t in sorted(set(toks)))
-
-        empty = spark.createDataFrame([], empty_schema)
         if not qterms:
-            return empty
+            return None
 
         # Q2: dictionary lookup (resident map or pruned semi-join).
         info = self._lookup(sorted({t for _, t in qterms}))
         if not info:
-            return empty
+            return None
         buckets = sorted({tb for _, tb in info.values()})
         idf_of = {
             t: float(bm25.idf(self.n_docs, np.array([df_]))[0])
             for t, (df_, _tb) in info.items()
         }
 
-        if gather == "auto":
-            big = self.n_ranges_est * len(queries) * k > GATHER_SPARK_THRESHOLD
-            gather = "spark" if big else "driver"
         # The plan rides in the kernel closure. One linear pass over
         # qterms, not a rescan per query id — a per-qid comprehension is
         # O(Q^2 * T) on the driver at 10k-query batches.
@@ -619,65 +657,8 @@ class SearchSession:
         blocks = self._segments.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(sorted(idf_of))
         )
-        per_range = blocks.mapInPandas(
+        return blocks.mapInPandas(
             _wand_partition_factory(plan, k, self.avgdl), _WAND_SCHEMA
-        )
-
-        # Q6/Q7: global merge of per-range top-k (<= ranges*queries*k rows).
-        out_cols = ["query_id", "rank", "doc_id", "score"]
-        if with_metrics:
-            out_cols += ["blocks_total", "blocks_decoded"]
-        if gather == "driver":
-            rows = per_range.collect()
-            per_q: dict[int, list] = {}
-            for r in rows:
-                per_q.setdefault(r["query_id"], []).append(r)
-            out = []
-            for qid in sorted(per_q):
-                ranked = sorted(per_q[qid], key=lambda r: (-r["score"], r["doc_id"]))
-                for rank, r in enumerate(ranked[:k], start=1):
-                    rec = [qid, rank, r["doc_id"], float(r["score"])]
-                    if with_metrics:
-                        rec += [r["blocks_total"], r["blocks_decoded"]]
-                    out.append(tuple(rec))
-            schema = "query_id int, rank int, doc_id long, score double"
-            if with_metrics:
-                schema += ", blocks_total long, blocks_decoded long"
-            # Result hand-back goes through one Arrow batch: a pandas
-            # frame with exact dtypes takes createDataFrame's Arrow fast
-            # path, where a list of tuples takes the row-by-row pickle
-            # path — measured 0.28 s vs ~0.03 s for a k-row result, and
-            # that delta was the single largest share of serving-tier
-            # query latency (fixed cost, independent of index size).
-            cols: dict[str, np.ndarray] = {
-                "query_id": np.fromiter(
-                    (r[0] for r in out), dtype=np.int32, count=len(out)
-                ),
-                "rank": np.fromiter(
-                    (r[1] for r in out), dtype=np.int32, count=len(out)
-                ),
-                "doc_id": np.fromiter(
-                    (r[2] for r in out), dtype=np.int64, count=len(out)
-                ),
-                "score": np.fromiter(
-                    (r[3] for r in out), dtype=np.float64, count=len(out)
-                ),
-            }
-            if with_metrics:
-                cols["blocks_total"] = np.fromiter(
-                    (r[4] for r in out), dtype=np.int64, count=len(out)
-                )
-                cols["blocks_decoded"] = np.fromiter(
-                    (r[5] for r in out), dtype=np.int64, count=len(out)
-                )
-            return spark.createDataFrame(pd.DataFrame(cols), schema)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            per_range.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(*out_cols)
         )
 
 

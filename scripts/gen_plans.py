@@ -70,9 +70,10 @@ def main():
         "range; hashpartitioning(range_bucket) with more), and MapInPandas "
         "runs the same block-max WAND kernel as a resident session, with "
         "the per-term (query_id, idf) plan in its closure — no join. The "
-        "window merge above it is gather='spark' and only sees "
-        "<= ranges*queries*k rows.",
-        plan(sess.search(["dup scan"], k=10, gather="spark")),
+        "kernel keeps at most k rows per (partition, query); `search()` "
+        "collects them as Arrow and merges them at the coordinator, so "
+        "nothing runs above MapInPandas.",
+        plan(sess._kernel_frame(["dup scan"], k=10)),
     ))
     resident = SearchSession(spark, root)
     sections.append((
@@ -80,11 +81,10 @@ def main():
         "Default: the same relation, persisted at session open (the "
         "Exchange inside InMemoryRelation is that one-time load shuffle), "
         "so the query itself is cached-scan -> Filter(term IN ...) -> "
-        "MapInPandas with NO join and NO per-query exchange. The window "
-        "merge below is gather='spark'; the default coordinator gather "
-        "(ranges*queries*k below threshold) has no post-kernel exchange at "
-        "all.",
-        plan(resident.search(["dup scan"], k=10, gather="spark")),
+        "MapInPandas with NO join and NO per-query exchange; the "
+        "coordinator merge of the <= partitions*queries*k kernel rows "
+        "follows the collect.",
+        plan(resident._kernel_frame(["dup scan"], k=10)),
     ))
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:

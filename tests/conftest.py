@@ -40,3 +40,16 @@ def index_sf0001(spark):
     build_index_from_documents(spark, SF0001, root)
     yield root
     shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def index_sf0001_ranges(spark):
+    """The sf0.001 corpus at range_bits=4: 32 doc ranges of 16 docs, so
+    a session on local[8] holds several ranges in each partition."""
+    from oculus_crawl_spark.config import IndexConfig
+    from oculus_crawl_spark.operators.build import build_index_from_documents
+
+    root = tempfile.mkdtemp(prefix="ocs_idx_sf0001_ranges_")
+    build_index_from_documents(spark, SF0001, root, cfg=IndexConfig(range_bits=4))
+    yield root
+    shutil.rmtree(root, ignore_errors=True)

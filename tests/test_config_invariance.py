@@ -9,6 +9,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from oculus_crawl_spark.config import IndexConfig
 from oculus_crawl_spark.operators.build import build_index_from_documents
@@ -23,6 +24,7 @@ CONFIGS = {
     "one_salt": IndexConfig(n_salts=1),
     "many_salts": IndexConfig(n_salts=13),
     "narrow_ranges": IndexConfig(range_bits=6),
+    "ranges_per_partition": IndexConfig(range_bits=4),
     "few_buckets": IndexConfig(n_term_buckets=3),
     "arrow_tokenizer": IndexConfig(use_jvm_tokenizer=False),
 }
@@ -49,3 +51,22 @@ def test_results_invariant_under_config(spark, baseline_results, name):
         assert _results(spark, root) == baseline_results, name
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_kernel_keeps_k_rows_per_partition_and_query(spark, index_sf0001_ranges):
+    """With several doc ranges in a partition, the WAND kernel emits at
+    most k rows per (partition, query) — not k per (range, query) — so
+    the coordinator merge stays partitions*queries*k rows at any scale."""
+    k = 3
+    sess = SearchSession(spark, index_sf0001_ranges)
+    try:
+        groups = (
+            sess._kernel_frame(QUERIES, k)
+            .groupBy(F.spark_partition_id().alias("part"), "query_id")
+            .count()
+            .collect()
+        )
+    finally:
+        sess.invalidate()
+    assert len({g["part"] for g in groups}) > 1  # the cut spans partitions
+    assert max(g["count"] for g in groups) <= k

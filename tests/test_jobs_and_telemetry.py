@@ -3,6 +3,7 @@ distinct-count telemetry op stays within its error bound vs exact."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -12,6 +13,9 @@ from pyspark.sql import functions as F
 from oculus_crawl_spark.operators.relational import q_approx_distinct
 
 from .conftest import SF0001
+
+# The checkout these tests belong to: job subprocesses run its jobs/.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize(
@@ -28,7 +32,7 @@ def test_job_cli_parses(script):
         [sys.executable, script, "--help"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=60,
     )
     assert out.returncode == 0, out.stderr
@@ -40,7 +44,7 @@ def test_job_cli_rejects_missing_args():
         [sys.executable, "jobs/build_index.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=60,
     )
     assert out.returncode != 0
@@ -60,7 +64,7 @@ def test_build_index_cli_rejects_pages_with_prior_index():
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=60,
     )
     assert out.returncode != 0
@@ -81,7 +85,7 @@ def test_build_index_cli_rejects_documents_with_prior_docmap():
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=60,
     )
     assert out.returncode != 0
@@ -115,7 +119,7 @@ def test_prepare_corpus_job_end_to_end(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]

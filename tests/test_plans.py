@@ -59,7 +59,7 @@ def test_query_uncached_plan_is_pruned_scan_one_exchange(spark, index_sf0001, tm
     root = str(tmp_path / "idx")
     shutil.copytree(index_sf0001, root)
     sess = SearchSession(spark, root, cache_segments=False)
-    df = sess.search(["dup scan"], k=10, gather="spark")
+    df = sess._kernel_frame(["dup scan"], k=10)
     formatted = _plan(df)
     assert "term_bucket" in formatted.split("PartitionFilters")[1][:250]
     assert "term" in formatted.split("PushedFilters")[1][:250]
@@ -74,23 +74,19 @@ def test_query_uncached_plan_is_pruned_scan_one_exchange(spark, index_sf0001, tm
 
 
 def test_query_fast_path_is_single_narrow_stage(spark, index_sf0001):
-    """A resident session must not shuffle or join the blocks:
-    cached scan -> filter -> MapInPandas. The only Exchange allowed in
-    the gather='spark' plan is the final tiny top-k window merge."""
+    """A resident session must not shuffle or join the blocks: a query
+    batch is cached scan -> filter -> MapInPandas, one narrow stage."""
     sess = SearchSession(spark, index_sf0001)
-    df = sess.search(["dup scan"], k=10, gather="spark")
-    plan = _plan(df, mode="simple")
+    plan = _plan(sess._kernel_frame(["dup scan"], k=10), mode="simple")
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert "Join" not in plan  # no join of any kind touches the blocks
-    # The query itself has exactly one Exchange — the final top-k window
-    # merge, ABOVE the WAND kernel (simple mode prints root-down). The
-    # repartition Exchange inside InMemoryRelation's cache-build plan is
-    # the one-time session-load shuffle, not a per-query cost.
+    # The query itself has no Exchange. The repartition Exchange inside
+    # InMemoryRelation's cache-build plan is the one-time session-load
+    # shuffle, not a per-query cost.
     query_part = plan.split("InMemoryRelation")[0]
     assert "InMemoryTableScan" in plan
-    assert query_part.count("Exchange") == 1
-    assert query_part.index("Exchange") < query_part.index("MapInPandas")
+    assert query_part.count("Exchange") == 0
 
 
 def test_tf_aggregation_is_partial(spark):
@@ -112,7 +108,7 @@ def test_no_row_python_udfs_anywhere(spark, index_sf0001):
     sess = SearchSession(spark, index_sf0001)
     plans = [
         _plan(term_frequencies(tokenize_corpus(docs))),
-        _plan(sess.search(["dup"], k=10, gather="spark")),
+        _plan(sess._kernel_frame(["dup"], k=10)),
     ]
     for p in plans:
         assert "BatchEvalPython" not in p

@@ -139,87 +139,53 @@ def test_k_zero_returns_empty_not_crash(spark, index_sf0001):
         sess.invalidate()
 
 
-def test_gather_modes_identical(spark, index_sf0001, query_set):
-    """Coordinator (driver) merge and distributed (window) merge must
-    produce identical rows — same pinned tie-break."""
-    from oculus_crawl_spark.operators.query import SearchSession
-
-    sess = SearchSession(spark, index_sf0001)
-    queries = query_set["queries"][:12]
-    a = sorted(map(tuple, sess.search(queries, k=10, gather="driver").collect()))
-    b = sorted(map(tuple, sess.search(queries, k=10, gather="spark").collect()))
-    assert a == b
-
-
 def test_fast_and_shuffle_paths_identical(spark, index_sf0001, query_set):
     """A resident session (persisted range-partitioned segments) and an
     uncached one (the same repartition per batch, over the parquet scan)
     run one kernel on two physical inputs — rows must be identical
-    across both, under both gather modes."""
+    across both."""
     from oculus_crawl_spark.operators.query import SearchSession
 
     cached = SearchSession(spark, index_sf0001)
     uncached = SearchSession(spark, index_sf0001, cache_segments=False)
     queries = query_set["queries"][:12]
     try:
-        ref = sorted(
-            map(tuple, cached.search(queries, k=10, gather="driver").collect())
-        )
+        ref = sorted(map(tuple, cached.search(queries, k=10).collect()))
         assert ref
-        for sess in (cached, uncached):
-            for gather in ("driver", "spark"):
-                got = sorted(
-                    map(tuple, sess.search(queries, k=10, gather=gather).collect())
-                )
-                assert got == ref, (sess is cached, gather)
+        assert sorted(map(tuple, uncached.search(queries, k=10).collect())) == ref
     finally:
         cached.invalidate()
 
 
-def test_auto_gather_switches_on_scale(spark, index_sf0001):
-    """gather='auto' must pick the distributed merge once
-    ranges*queries*k crosses the threshold (driver collect of ~1M rows
-    per query batch at 10^12 docs is the failure mode this guards)."""
-    from oculus_crawl_spark.operators import query as qmod
-
-    sess = qmod.SearchSession(spark, index_sf0001)
-    big = sess.n_ranges_est * 1 * 10 > qmod.GATHER_SPARK_THRESHOLD
-    assert not big  # sandbox index is small -> auto resolves to driver
-    # Force the threshold down: auto must now produce the spark merge,
-    # and rows must match the driver merge exactly.
-    a = sorted(map(tuple, sess.search(["dup scan"], k=10, gather="driver").collect()))
-    old = qmod.GATHER_SPARK_THRESHOLD
-    try:
-        qmod.GATHER_SPARK_THRESHOLD = 0
-        # re-read inside search via module global
-        b_df = sess.search(["dup scan"], k=10, gather="auto")
-        assert "rank" in b_df.columns
-        b = sorted(map(tuple, b_df.collect()))
-    finally:
-        qmod.GATHER_SPARK_THRESHOLD = old
-    assert a == b
-
-
-def test_metrics_decoded_never_exceeds_total(spark, index_sf0001):
+@pytest.mark.parametrize("index", ["index_sf0001", "index_sf0001_ranges"])
+def test_metrics_decoded_never_exceeds_total(spark, request, index):
     """Per-query decode telemetry is a snapshot delta over the shared
     per-(range,term) block cache: a repeated query in the same batch must
     report blocks_decoded <= blocks_total (0 decodes on a warm cache),
-    never a cross-query accumulation."""
+    never a cross-query accumulation. The counters are per-query totals
+    over every range, on every row of the query — on a many-range index
+    too, where they are summed across ranges and partitions."""
     from oculus_crawl_spark.operators.query import SearchSession
 
-    sess = SearchSession(spark, index_sf0001)
-    out = sess.search(
-        ["the scan column", "the scan column", "the"], k=10, with_metrics=True
-    ).collect()
+    root = request.getfixturevalue(index)
+    sess = SearchSession(spark, root)
+    queries = ["the scan column", "the scan column", "the"]
+    out = sess.search(queries, k=10, with_metrics=True).collect()
     assert out
     per_q = {}
     for r in out:
         assert 0 <= r["blocks_decoded"] <= r["blocks_total"], dict(r.asDict())
-        per_q[r["query_id"]] = (r["blocks_total"], r["blocks_decoded"])
+        counts = (r["blocks_total"], r["blocks_decoded"])
+        assert per_q.setdefault(r["query_id"], counts) == counts
     # Identical queries see the same totals; the repeat rides the warm
     # cache, so its decode delta cannot exceed the first run's.
     assert per_q[0][0] == per_q[1][0]
     assert per_q[1][1] <= per_q[0][1]
+    # blocks_total is every block of the query's terms, over all ranges.
+    seg = spark.read.parquet(f"{root}/segments")
+    for qid, q in enumerate(queries):
+        terms = sorted(set(tokenize(q)))
+        assert per_q[qid][0] == seg.filter(seg.term.isin(terms)).count(), q
 
 
 def test_session_cache_lru_eviction(spark, index_sf0001, tmp_path):

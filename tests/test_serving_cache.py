@@ -53,7 +53,7 @@ def _reads_cache(sess, term: str = "shared") -> bool:
     """Whether a query batch of ``sess`` reads persisted segments."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        sess.search([term], k=5, gather="spark").explain()
+        sess._kernel_frame([term], k=5).explain()
     return "InMemoryTableScan" in buf.getvalue()
 
 
