@@ -423,10 +423,11 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
         out = pd.DataFrame(
             {"query_id": qid[sel], "doc_id": doc[sel], "score": score[sel]}
         )
-        lead = qid[sel][rank == 1]
+        lead = rank == 1
+        lead_qids = qid[sel][lead].tolist()
         for j, name in enumerate(_COUNTERS):
             col = np.zeros(len(sel), dtype=np.int64)
-            col[rank == 1] = [counters[q][j] for q in lead.tolist()]
+            col[lead] = [counters[q][j] for q in lead_qids]
             out[name] = col
         yield out
 
@@ -447,9 +448,10 @@ class SearchSession:
     relation PARTITIONED BY ``range_bucket``, persisted when
     ``cache_segments=True`` — so a query batch is ONE Spark job over
     the same kernel either way: filter -> mapInPandas WAND, then one
-    Arrow merge at the coordinator. A resident session's job is one narrow stage over the cache; an
-    uncached session (one-shot querying, or segments too large to hold
-    resident) adds one exchange of the term-filtered blocks per batch.
+    Arrow merge at the coordinator. A resident session's job is one
+    narrow stage over the cache; an uncached session (one-shot querying,
+    or segments too large to hold resident) adds one exchange of the
+    term-filtered blocks per batch.
     Sessions on one root share the persisted relation (an uncached one
     reads it too while a resident session holds it); see ``invalidate``.
     Opening a session on a root rebuilt in place unpersists the older
@@ -487,10 +489,9 @@ class SearchSession:
             spark, self.paths.segments, schemas.SEGMENTS
         ).select(*_SEG_COLS)
         # Ranges actually present (partition sizing): dense doc_ids make
-        # this exact.
-        # Stored geometry wins over the caller's cfg — a session opened
-        # with a different range_bits would mis-size the cached layout.
-        # Pre-geometry indexes are refused
+        # this exact. Stored geometry wins over the caller's cfg — a
+        # session opened with a different range_bits would mis-size the
+        # cached layout. Pre-geometry indexes are refused
         # here exactly like merge_indexes refuses them (index_geometry
         # raises): one surface silently falling back to cfg while the
         # other hard-fails was an inconsistent contract.

@@ -157,8 +157,7 @@ def test_fast_and_shuffle_paths_identical(spark, index_sf0001, query_set):
         cached.invalidate()
 
 
-@pytest.mark.parametrize("index", ["index_sf0001", "index_sf0001_ranges"])
-def test_metrics_decoded_never_exceeds_total(spark, request, index):
+def test_metrics_decoded_never_exceeds_total(spark, index_sf0001, index_sf0001_ranges):
     """Per-query decode telemetry is a snapshot delta over the shared
     per-(range,term) block cache: a repeated query in the same batch must
     report blocks_decoded <= blocks_total (0 decodes on a warm cache),
@@ -167,25 +166,26 @@ def test_metrics_decoded_never_exceeds_total(spark, request, index):
     too, where they are summed across ranges and partitions."""
     from oculus_crawl_spark.operators.query import SearchSession
 
-    root = request.getfixturevalue(index)
-    sess = SearchSession(spark, root)
     queries = ["the scan column", "the scan column", "the"]
-    out = sess.search(queries, k=10, with_metrics=True).collect()
-    assert out
-    per_q = {}
-    for r in out:
-        assert 0 <= r["blocks_decoded"] <= r["blocks_total"], dict(r.asDict())
-        counts = (r["blocks_total"], r["blocks_decoded"])
-        assert per_q.setdefault(r["query_id"], counts) == counts
-    # Identical queries see the same totals; the repeat rides the warm
-    # cache, so its decode delta cannot exceed the first run's.
-    assert per_q[0][0] == per_q[1][0]
-    assert per_q[1][1] <= per_q[0][1]
-    # blocks_total is every block of the query's terms, over all ranges.
-    seg = spark.read.parquet(f"{root}/segments")
-    for qid, q in enumerate(queries):
-        terms = sorted(set(tokenize(q)))
-        assert per_q[qid][0] == seg.filter(seg.term.isin(terms)).count(), q
+    for root in (index_sf0001, index_sf0001_ranges):
+        out = SearchSession(spark, root).search(
+            queries, k=10, with_metrics=True
+        ).collect()
+        assert out
+        per_q = {}
+        for r in out:
+            assert 0 <= r["blocks_decoded"] <= r["blocks_total"], dict(r.asDict())
+            counts = (r["blocks_total"], r["blocks_decoded"])
+            assert per_q.setdefault(r["query_id"], counts) == counts
+        # Identical queries see the same totals; the repeat rides the warm
+        # cache, so its decode delta cannot exceed the first run's.
+        assert per_q[0][0] == per_q[1][0]
+        assert per_q[1][1] <= per_q[0][1]
+        # blocks_total is every block of the query's terms, over all ranges.
+        seg = spark.read.parquet(f"{root}/segments")
+        for qid, q in enumerate(queries):
+            terms = sorted(set(tokenize(q)))
+            assert per_q[qid][0] == seg.filter(seg.term.isin(terms)).count(), q
 
 
 def test_session_cache_lru_eviction(spark, index_sf0001, tmp_path):
